@@ -25,7 +25,8 @@ END_TO_END = [
              "writes and pays the index patch (read-after-write)"},
     {"name": "ann_recall_at_10", "unit": "ratio", "better": "higher",
      "bound": 0.2,
-     "what": "overlap of the ANN top-10 with numpy's exact top-10"},
+     "what": "overlap of the ANN top-10 with numpy's exact top-10, "
+             "averaged over every ANN read of the run, warm-up included"},
     {"name": "bytes_stored_per_live_byte", "unit": "ratio",
      "better": "lower", "bound": 0.1,
      "what": "catalog-root bytes / snapshot bytes after the sequence"},

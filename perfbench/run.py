@@ -2,20 +2,20 @@
 
 Run from the repository root:
 
-    python3 perfbench/run.py --workload search_fresh --seed 1 --seconds 20 --trace 0
+    python3 perfbench/run.py --workload search_fresh --seed 1 --seconds 16 --trace 0
 
 One client drives the public ``Engine`` API in a closed loop over a
-seeded job-listing table (job_id, company, title, 384-dim embedding).
+seeded job-listing table (job_id, company, title, 128-dim embedding).
 Workloads (see ``workload.CYCLES``):
 
 * ``search_fresh``: read-only 40/20/20/20 mix of exact / hybrid / ANN /
   SQL; every op brings a new query vector, so each pays code generation.
 * ``search_repeat``: the same mix over a pool of eight queries that the
   warm-up has already run; the control for search_fresh. It is not in
-  ``BENCHMARK.json``: every run pays about 45 s of set-up, and a third
+  ``BENCHMARK.json``: every run pays about 40 s of set-up, and a third
   workload would not fit the time a full set of runs may take.
-* ``write_read``: two 100-row upserts of existing keys, an ANN read that
-  must patch the stale index, and an exact search.
+* ``write_read``: a 20-row upsert of existing keys, an ANN read that
+  must patch the stale index, and three exact searches.
 
 ``--trace 0`` prints the end-to-end metrics. ``--trace 1`` runs the
 same op sequence with spans around each layer and Spark's counters read
@@ -41,8 +41,13 @@ HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 PACKAGE = "pydata_vector_search_spark"
 
-# Spark task threads: at most 4, and never more than the host has.
-SPARK_CORES = 4
+# Spark task threads. Two, never more than the host has: on a 4-core
+# host that leaves cores to the JVM thread that plans each query, the JIT
+# and GC threads and the Python client, whose work an op waits on. In
+# five-seed trials of search_fresh on a 4-core host, the latencies'
+# run-to-run spread (quartile distance / median) was about 0.1 with four
+# task threads and 0.03 with two.
+SPARK_CORES = 2
 
 
 def parse_args(argv):
@@ -112,6 +117,7 @@ class Run:
         self.engine = Engine(self.spark, self.root)
         self.engine.ingest(self.spark.read.parquet(staging), "jobs",
                            key="job_id")
+        t_ingest = time.perf_counter()
         self.engine.ann_index_create("jobs", "embedding",
                                      num_centroids=self.size.centroids)
         if "sql" in CYCLES[self.args.workload]:
@@ -126,7 +132,7 @@ class Run:
             self.run_op(op)
         t4 = time.perf_counter()
         log(f"set-up: session {t1 - t0:.2f}s, inputs {t2 - t1:.2f}s, "
-            f"ingest and index {t3 - t2:.2f}s, "
+            f"ingest {t_ingest - t2:.2f}s, index {t3 - t_ingest:.2f}s, "
             f"warm-up {len(warm)} ops {t4 - t3:.2f}s")
         return t4 - t0
 
@@ -258,6 +264,23 @@ def drift_pct(recs: list) -> dict:
     return out
 
 
+def cpu_times() -> list[int]:
+    """The summed CPU time counters of all CPUs (Linux /proc/stat), or []."""
+    try:
+        with open("/proc/stat") as f:
+            return [int(x) for x in f.readline().split()[1:]]
+    except (OSError, ValueError):
+        return []
+
+
+def steal_pct(a: list[int], b: list[int]) -> float:
+    """Share of CPU time the hypervisor gave to other guests between two
+    ``cpu_times`` readings (the 8th counter is steal)."""
+    if len(a) < 8 or len(b) < 8 or sum(b) == sum(a):
+        return 0.0
+    return 100.0 * (b[7] - a[7]) / (sum(b) - sum(a))
+
+
 def measure(args, work: str) -> dict:
     from workload import timed_op_count
     run = Run(args, work)
@@ -271,7 +294,9 @@ def measure(args, work: str) -> dict:
         if args.trace:
             from layers import Tracer
             tracer = Tracer(run)
+        cpu0 = cpu_times()
         recs, wall = run.run_sequence(ops, tracer)
+        log(f"host steal during the timed ops {steal_pct(cpu0, cpu_times()):.1f}%")
         drift = drift_pct(recs)
         log(f"timed {n} ops in {wall:.2f}s: "
             + ", ".join(f"{r['kind']} {r['wall']:.2f}s" for r in recs))
@@ -287,6 +312,7 @@ def measure(args, work: str) -> dict:
 
 
 def main(argv=None) -> int:
+    t0 = time.perf_counter()
     sys.path.insert(0, HERE)
     args = parse_args(argv)
     if not os.path.isfile(os.path.join(ROOT, PACKAGE, "__init__.py")):
@@ -309,6 +335,7 @@ def main(argv=None) -> int:
     units = {m["name"]: m["unit"] for m in END_TO_END + PER_LAYER}
     result["metrics"] = {k: {"value": result["metrics"][k], "unit": units[k]}
                          for k in names}
+    log(f"run took {time.perf_counter() - t0:.1f}s")
     print(json.dumps(result), flush=True)
     return 0
 

@@ -111,9 +111,9 @@ def test_traced_counts_repeat(workload):
     exact = [k for k in a["metrics"] if k.startswith(EXACT)]
     if workload == "write_read":
         # The index patch's Spark jobs and tasks repeat, but the classes
-        # it compiles do not quite (42-46 at this seed and size): its
-        # concurrent stages hit the 100-entry codegen cache in an order
-        # that varies, so which entries are evicted varies too.
+        # it compiles need not: its concurrent stages hit the 100-entry
+        # codegen cache in an order that varies, so which entries are
+        # evicted varies too.
         exact.remove("functions.vector.compiles_per_search")
         assert a["metrics"]["functions.vector.compiles_per_search"]["value"] > 0
     assert len(exact) > 15

@@ -27,50 +27,63 @@ class Size:
     companies: int        # hybrid filter selectivity is 1 / companies
     k: int = 10
     nprobe: int = 8
-    upsert_rows: int = 100
+    # keys per upsert (existing keys, new vectors). 20 keys sit in about
+    # 17 of 64 centroid partitions, which the index patch rewrites; at
+    # 100 keys it rewrote nearly all of them and a patched read took
+    # about 9 s, too long to time enough of them in one run.
+    upsert_rows: int = 20
     readback_rows: int = 5  # upserted keys read back after each upsert
 
 
+# The reference embeds with a 384-dim model. The benchmark uses 128 dims:
+# the engine inlines each query vector as one literal per dimension, so
+# an op's planning and code generation grow with the dimension, and at
+# 384 a run could not both warm up and time enough ops for steady
+# medians within the time a full set of runs may take.
 SIZES = {
-    "full": Size(rows=10_000, dim=384, centroids=64, companies=50),
+    "full": Size(rows=10_000, dim=128, centroids=64, companies=50),
     # for the benchmark's own tests: same code paths, seconds not minutes
     "tiny": Size(rows=600, dim=16, centroids=8, companies=6,
-                 upsert_rows=20, readback_rows=3),
+                 readback_rows=3),
 }
 
 # Generator geometry: cluster centres on the unit sphere, points at
 # SPREAD (in units of 1/sqrt(dim) per coordinate) around them, queries
 # at QUERY_NOISE around a random row. Chosen so nprobe=8 of 64 gives a
 # recall@10 near 0.95: below 1.0, so a recall loss can show.
-SPREAD = 2.4
+SPREAD = 1.7
 QUERY_NOISE = 0.75
 
 READ_OPS = ("search", "hybrid", "ann", "sql")
 OPS = READ_OPS + ("upsert",)
 
 # One cycle of each workload. The search cycle is the 40/20/20/20 mix of
-# exact / hybrid / ANN / SQL; the write cycle is two upserts, a read
-# that has to patch the index, and an exact search.
+# exact / hybrid / ANN / SQL; the write cycle is an upsert, a read that
+# has to patch the index, and three exact searches (three, so that a run
+# of two cycles still has enough of them for a median).
 CYCLES = {
     "search_fresh": ("ann", "search", "hybrid", "sql", "search"),
     "search_repeat": ("ann", "search", "hybrid", "sql", "search"),
-    "write_read": ("upsert", "upsert", "ann", "search"),
+    "write_read": ("upsert", "ann", "search", "search", "search"),
 }
 
-# Untimed ops before the sequence. The first vector search in a fresh
-# JVM costs several times a warm one (the JIT has not yet compiled the
-# planner paths a 384-term distance expression drives); one ANN read
-# takes that cost out of the timed ops, and leaves about a second of it
-# to the first exact search. search_repeat instead runs every pooled
+# Untimed ops before the timed sequence. The first vector search in a
+# fresh JVM costs several times a warm one, and the next few still fall
+# while the JIT compiles the planner paths a 128-term distance expression
+# drives (and, on write_read, the commit and index-patch paths). One pass
+# over each op type takes the timed ops past most of that knee, but the
+# second ANN read (patched or not) was still 10-30% slower than later
+# ones, so the warm-up has two. search_repeat instead runs every pooled
 # query once, so the codegen cache holds them all.
-WARMUP = {"search_fresh": ("ann",), "write_read": ("ann",)}
+WARMUP = {"search_fresh": CYCLES["search_fresh"] + ("ann",),
+          "write_read": ("upsert", "ann", "search", "upsert", "ann")}
 
 # Nominal ops per second of each workload on a 4-core host. ``--seconds``
 # times this rate fixes the length of the op sequence, so a run's work
 # depends only on its arguments, never on how fast the host happens to
 # be; the timed phase then lasts about ``--seconds`` on such a host.
-NOMINAL_OPS_PER_S = {"search_fresh": 0.6, "search_repeat": 0.85,
-                     "write_read": 0.4}
+NOMINAL_OPS_PER_S = {"search_fresh": 1.0, "search_repeat": 1.3,
+                     "write_read": 0.5}
 
 # search_repeat and write_read draw their vectors from small pools, as
 # when notebook cells are re-run: two per read op type, eight in all.
@@ -207,8 +220,9 @@ class OpStream:
 
 
 def timed_op_count(workload: str, seconds: int) -> int:
-    return max(len(CYCLES[workload]),
-               round(seconds * NOMINAL_OPS_PER_S[workload]))
+    """Whole cycles, at least one, so every run has the same op mix."""
+    n = len(CYCLES[workload])
+    return n * max(1, round(seconds * NOMINAL_OPS_PER_S[workload] / n))
 
 
 # --------------------------------------------------------------------------

@@ -9,10 +9,16 @@ primitives — the design the survey calls out:
   seeded); every row gets its nearest-centroid id; the table is rewritten as
   parquet **partitioned by centroid id**.
 * **probe**: rank centroids against the query vector driver-side (k×dim
-  floats — tiny), then scan ONLY the ``nprobe`` nearest partitions via an
-  ``IN`` filter that Catalyst turns into partition pruning, and exact
-  re-rank inside them with the same ``vector_search`` plan used for exact
-  mode (operators/knn.py).
+  floats — tiny), then read ONLY the ``nprobe`` nearest partition
+  directories: the scan is handed their paths (the driver lists just
+  those directories; the other partitions are never listed or opened)
+  plus an ``IN`` filter on the centroid id that Catalyst keeps as a
+  partition filter, and exact re-rank inside them with the same
+  ``vector_search`` plan used for exact mode (operators/knn.py). The
+  schema comes from one parquet footer read on the driver, so a probe
+  is one Spark job. Past 32 probed paths
+  (``spark.sql.sources.parallelPartitionDiscovery.threshold``) Spark
+  lists them in a parallel job of its own.
 
 So "ANN probe" is literally "pruned scan + exact top-k": at 100 TB with
 1000 centroids and nprobe=20, each query touches 2% of the data, the probed
@@ -31,7 +37,9 @@ from collections.abc import Sequence
 
 import numpy as np
 import pandas as pd
+import pyarrow.fs as pafs
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StructType
 
 from pydata_vector_search_spark.functions.vector import query_vector_lit
 from pydata_vector_search_spark.operators.knn import vector_search
@@ -235,39 +243,42 @@ def ivf_patch(spark: SparkSession, index: IVFIndex, changes: DataFrame,
     """Incrementally repair an IVF index from a CDC batch (latest row per
     key + ``_deleted`` tombstones — exactly what ``read_incremental``
     emits since the index's build commit): work ∝ changed data, not
-    corpus.
-
-    Mechanics: (1) find the centroid partitions holding STALE versions of
-    the changed keys — one column-pruned (id, cid) pass over the index
-    with the key set attached by BROADCAST hash join; (2) rewrite only
-    those partitions minus the changed keys (dynamic partition
-    overwrite); (3) assign the surviving upserted rows to centroids with
-    the EXISTING centroid matrix and append them into the partition
-    layout. Centroids do not move — recall drifts only as far as the
-    data distribution does (the standard IVF maintenance trade; rebuild
+    corpus. Centroids do not move — recall drifts only as far as the data
+    distribution does (the standard IVF maintenance trade; rebuild
     re-trains).
 
-    Guard order (r17, restoring the r16-ADVICE ordering): the overflow
-    probe is an early-terminating ``limit(max_patch_keys+1).collect()``
-    of the DISTINCT KEY COLUMN on the lazy CDC lineage — a single-column
-    projection, so an oversized batch is rejected before any full-row
-    (vector-carrying) materialization. Overflow past ``max_patch_keys``
-    raises a ValueError pointing at a full rebuild, which scans
-    everything once anyway and re-trains centroids — strictly better at
-    that size. Only a batch that PASSES the guard is eagerly
-    ``localCheckpoint``-ed (once — full rows), so the key relation, the
-    live-row count and the centroid-assign append all read materialized
-    rows instead of re-running the incremental lineage end to end.
+    Steps:
 
-    The changed-key set is joined as a broadcast relation, never an
-    ``isin`` literal list (guide §3): at the 1M-key bound an ``isin``
-    builds a ~1M-literal expression tree on the driver and into codegen;
-    the broadcast hash semi/anti join is the scalable spelling of the
-    same predicate."""
-    import shutil
-    from urllib.parse import unquote, urlparse
+    1. **Guard.** An early-terminating ``limit(max_patch_keys+1)
+       .collect()`` of the DISTINCT KEY COLUMN on the lazy CDC lineage —
+       a single-column projection, so an oversized batch is rejected
+       before any full-row (vector-carrying) work. Past
+       ``max_patch_keys`` it raises a ValueError pointing at a full
+       rebuild, which scans everything once anyway and re-trains
+       centroids — strictly better at that size.
+    2. **Key relation.** The collected keys become a driver-local
+       relation that every index-side join broadcasts, so the CDC
+       lineage is not run again to derive them. It is never an ``isin``
+       literal list: at the 1M-key bound that builds a ~1M-literal
+       expression tree on the driver and into codegen.
+    3. **New rows.** The live (non-tombstoned) changed rows are assigned
+       to the EXISTING centroids and quantized once, then checkpointed;
+       both reads below use the materialized rows.
+    4. **Stats.** One aggregate over the index's (id, cid) columns,
+       unioned with the new rows' cids, counts per centroid partition
+       the stale rows, the surviving keyed rows and the new rows.
+    5. **Rewrite.** Every partition that holds stale rows or receives
+       new rows is written ONCE — its survivors ∪ its new rows, clustered
+       by cid, in one dynamic-overwrite write — so it keeps one file.
+       Dynamic overwrite replaces every partition present in the written
+       data, which is why a partition that only receives new rows is
+       rewritten with its existing rows. Survivors of a stale partition
+       are its non-NULL-id rows whose key is not in the batch; a stale
+       partition left with none and receiving no new rows is absent from
+       the written data, so its directory is deleted (even when NULL-id
+       rows remain in it)."""
+    from pyspark.sql.types import StructField
 
-    vec = index.vector_col
     head = changes.select(id_col).distinct() \
                   .limit(max_patch_keys + 1).collect()
     if len(head) > max_patch_keys:
@@ -277,70 +288,63 @@ def ivf_patch(spark: SparkSession, index: IVFIndex, changes: DataFrame,
             "a slower plan than a full scan. Rebuild the index instead "
             "(ivf_build / on_stale='rebuild'), or raise "
             "max_patch_keys explicitly.")
-    keys = [r[0] for r in head]
-    if not keys:
+    if not head:
         return {"removed_partitions": 0, "appended": 0}
-    changes = changes.localCheckpoint(eager=True)
-    # the changed-key relation: derived from the materialized batch (a
-    # cheap distinct over checkpoint blocks), broadcast into every
-    # index-side join below
-    kdf = changes.select(F.col(id_col).alias("__k")).distinct()
+    key_type = changes.schema[id_col].dataType
+    kdf = spark.createDataFrame(
+        pd.DataFrame({"__k": [r[0] for r in head if r[0] is not None]}),
+        StructType([StructField("__k", key_type)]))
 
-    data = spark.read.parquet(index.data_path)
-    quantized = _CODE in data.columns
-    # ONE aggregate answers both "which centroid partitions hold stale
-    # versions" and "which end up EMPTY after the purge" (r16), with the
-    # key set attached by broadcast join (r17) instead of a
-    # per-row isin over a driver-built literal list. ``__live`` counts
-    # survivors under EXACTLY the keep-filter below (non-NULL id, key
-    # not in batch) — the r16-ADVICE fix: a touched partition whose
-    # keep set is empty must be deleted even when NULL-id rows remain
-    # (the old ``__tot == __stale`` test missed that case and stranded
-    # stale files).
-    cid_stats = (data.join(F.broadcast(kdf),
-                           F.col(id_col) == F.col("__k"), "left")
-                     .groupBy(_CID)
-                     .agg(F.sum(F.col("__k").isNotNull().cast("long"))
-                           .alias("__stale"),
-                          F.sum((F.col("__k").isNull()
-                                 & F.col(id_col).isNotNull()).cast("long"))
-                           .alias("__live"))
-                     .filter(F.col("__stale") > 0).collect())
-    touched = [r[0] for r in cid_stats]
-    if touched:
-        keep = (data.filter(F.col(_CID).isin(touched))
-                    .filter(F.col(id_col).isNotNull())
-                    .join(F.broadcast(kdf),
-                          F.col(id_col) == F.col("__k"), "left_anti")
-                    .localCheckpoint(eager=True))
-        emptied = [r[0] for r in cid_stats if r["__live"] == 0]
-        empty_dirs = set()
-        if emptied:
-            files = [r[0] for r in data.filter(F.col(_CID).isin(emptied))
-                     .select(F.input_file_name()).distinct().collect()]
-            empty_dirs = {os.path.dirname(unquote(urlparse(f).path))
-                          for f in files}
-        (keep.write.mode("overwrite")
-             .option("partitionOverwriteMode", "dynamic")
-             .partitionBy(_CID).parquet(index.data_path))
-        for d in empty_dirs:
-            shutil.rmtree(d, ignore_errors=True)
-
+    schema = _index_schema(index)
     live = changes
     if deleted_col in changes.columns:
         live = changes.filter(
             ~F.coalesce(F.col(deleted_col), F.lit(False)))
-    live = live.select(*[c for c in live.columns
-                         if c not in (deleted_col, "commit")])
-    n_new = live.count()
-    if n_new:
-        assigned = assign_centroids(live, vec, index.centroids, index.metric)
-        if quantized:
-            assigned = quantize_int8(assigned, vec)
-        (assigned.repartition(max(1, min(len(keys) // 1000 + 1, 8)), _CID)
-                 .write.mode("append").partitionBy(_CID)
-                 .parquet(index.data_path))
-    return {"removed_partitions": len(touched), "appended": n_new}
+    new = assign_centroids(live, index.vector_col, index.centroids,
+                           index.metric)
+    if _CODE in schema.names:
+        new = quantize_int8(new, index.vector_col)
+    new = new.select(*schema.names).localCheckpoint(eager=True)
+
+    zero, one = F.lit(0).cast("long"), F.lit(1).cast("long")
+    hit = F.col("__k").isNotNull()
+    flags = (spark.read.schema(schema).parquet(index.data_path)
+                  .select(id_col, _CID)
+                  .join(F.broadcast(kdf), F.col(id_col) == F.col("__k"),
+                        "left")
+                  .select(_CID, hit.cast("long").alias("__stale"),
+                          (~hit & F.col(id_col).isNotNull()).cast("long")
+                           .alias("__live"),
+                          zero.alias("__new"))
+                  .unionByName(new.select(_CID, zero.alias("__stale"),
+                                          zero.alias("__live"),
+                                          one.alias("__new"))))
+    stats = (flags.groupBy(_CID)
+                  .agg(*[F.sum(c).alias(c)
+                         for c in ("__stale", "__live", "__new")])
+                  .filter((F.col("__stale") > 0) | (F.col("__new") > 0))
+                  .collect())
+    stale = [r[_CID] for r in stats if r["__stale"]]
+    written = [r[_CID] for r in stats if r["__live"] or r["__new"]]
+    emptied = [r[_CID] for r in stats if not (r["__live"] or r["__new"])]
+    if written:
+        keep = (_probe_scan(spark, index, written)
+                    .join(F.broadcast(kdf), F.col(id_col) == F.col("__k"),
+                          "left_anti")
+                    .filter(F.col(id_col).isNotNull()
+                            | ~F.col(_CID).isin(stale)))
+        (keep.unionByName(new).repartition(F.col(_CID))
+             .write.mode("overwrite")
+             .option("partitionOverwriteMode", "dynamic")
+             .partitionBy(_CID).parquet(index.data_path))
+    if emptied:
+        fs, root = _data_fs(index)
+        for cid in emptied:
+            d = f"{root}/{_CID}={cid}"
+            if fs.get_file_info(d).type == pafs.FileType.Directory:
+                fs.delete_dir(d)
+    return {"removed_partitions": len(stale),
+            "appended": sum(r["__new"] for r in stats)}
 
 
 def probe_cids(index: IVFIndex, query_vec: Sequence[float],
@@ -359,6 +363,70 @@ def probe_cids(index: IVFIndex, query_vec: Sequence[float],
     return [int(c) for c in order[:nprobe]]
 
 
+def _data_fs(index: IVFIndex) -> tuple[pafs.FileSystem, str]:
+    """The filesystem and root of the index's data directory, resolved
+    the way pyarrow resolves ``IVFIndex.load``'s path: a URI
+    (``file:///...``) or a plain local path."""
+    try:
+        return pafs.FileSystem.from_uri(index.data_path)
+    except ValueError:          # no scheme: a local (maybe relative) path
+        return pafs.LocalFileSystem(), os.path.abspath(index.data_path)
+
+
+def _index_schema(index: IVFIndex) -> StructType:
+    """The index rows' Spark schema (partition column included), read on
+    the driver from the footer of one data file — the schema Spark wrote
+    there — so a scan given this schema skips Spark's footer-inference
+    job."""
+    import json
+
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import IntegerType
+
+    fs, root = _data_fs(index)
+
+    def ls(path):
+        return sorted(fs.get_file_info(pafs.FileSelector(path)),
+                      key=lambda i: i.base_name)
+
+    for d in ls(root):
+        if not (d.type == pafs.FileType.Directory
+                and d.base_name.startswith(f"{_CID}=")):
+            continue
+        for f in ls(d.path):
+            if (f.type == pafs.FileType.File and f.extension == "parquet"
+                    and not f.base_name.startswith((".", "_"))):
+                md = pq.read_schema(f.path, filesystem=fs).metadata
+                schema = StructType.fromJson(json.loads(
+                    md[b"org.apache.spark.sql.parquet.row.metadata"]))
+                return schema.add(_CID, IntegerType())
+    raise ValueError(f"IVF index at {index.path!r} holds no data files")
+
+
+def _probe_scan(spark: SparkSession, index: IVFIndex,
+                cids: Sequence[int]) -> DataFrame:
+    """Read only the partition directories of ``cids`` — the scan every
+    IVF tier probes through. Spark lists just these paths (on the driver
+    while there are at most 32 of them; past
+    ``spark.sql.sources.parallelPartitionDiscovery.threshold`` it lists
+    them in a parallel job) and, given the schema, infers nothing, so the
+    probe runs as one job. The ``__cid IN (...)`` filter stays so the
+    plan shows the pruning as PartitionFilters. Directories a patch
+    deleted are skipped; if none remain the frame is empty."""
+    schema = _index_schema(index)
+    fs, root = _data_fs(index)
+    dirs = [f"{_CID}={c}" for c in cids]
+    paths = [os.path.join(index.data_path, d)
+             for d, info in zip(dirs, fs.get_file_info(
+                 [f"{root}/{d}" for d in dirs]))
+             if info.type == pafs.FileType.Directory]
+    if not paths:
+        return spark.createDataFrame([], schema)
+    return (spark.read.schema(schema)
+                 .option("basePath", index.data_path).parquet(*paths)
+                 .filter(F.col(_CID).isin(list(cids))))
+
+
 def ivf_search(spark: SparkSession, index: IVFIndex,
                query_vec: Sequence[float], k: int = 10, nprobe: int = 8,
                filter: Column | None = None,
@@ -366,14 +434,14 @@ def ivf_search(spark: SparkSession, index: IVFIndex,
                tiebreaker: str | None = None,
                round_to: int | None = None) -> DataFrame:
     """Probe the ``nprobe`` centroid partitions nearest to ``query_vec``;
-    exact re-rank inside them. Plan: parquet scan with partition filter
-    ``__cid IN (...)`` (PartitionFilters in .explain — directories outside
-    the probe set are never opened) → TakeOrderedAndProject(k)."""
+    exact re-rank inside them. Plan: parquet scan of the probed partition
+    directories only, with partition filter ``__cid IN (...)``
+    (PartitionFilters in .explain) → TakeOrderedAndProject(k). The driver
+    lists only the probed directories, and the whole read is one Spark
+    job up to 32 probed paths; past that Spark adds a parallel listing
+    job."""
     q = np.asarray(list(query_vec), dtype=np.float64)
-    probe = probe_cids(index, q, nprobe)
-
-    data = spark.read.parquet(os.path.join(index.path, "data")) \
-                .filter(F.col(_CID).isin(probe))
+    data = _probe_scan(spark, index, probe_cids(index, q, nprobe))
     return vector_search(data, index.vector_col, [float(v) for v in q], k=k,
                          metric=index.metric, filter=filter,
                          distance_col=distance_col, tiebreaker=tiebreaker,
@@ -412,15 +480,13 @@ def ivf_search_int8(spark: SparkSession, index: IVFIndex,
 
     q = np.asarray(list(query_vec), dtype=np.float64)
     metric = index.metric
-    probe = probe_cids(index, q, nprobe)
-
-    scan = spark.read.parquet(index.data_path).filter(F.col(_CID).isin(probe))
-    if _CODE not in scan.columns:
+    data = _probe_scan(spark, index, probe_cids(index, q, nprobe))
+    if _CODE not in data.columns:
         raise ValueError(
             "index was built with quantize=False — no int8 code column; "
             "rebuild with ivf_build(..., quantize=True) or use ivf_search")
-    if filter is not None:
-        scan = scan.filter(filter)   # pre-filter hybrid: pushed into the scan
+    # pre-filter hybrid: pushed into the scan
+    scan = data if filter is None else data.filter(filter)
 
     qn = float(np.linalg.norm(q)) or 1.0
     qq = float(q @ q)
@@ -449,9 +515,7 @@ def ivf_search_int8(spark: SparkSession, index: IVFIndex,
                 .limit(k * refine))
     ids = [r[0] for r in cand.select(id_col).collect()]
 
-    fetch = spark.read.parquet(index.data_path) \
-                 .filter(F.col(_CID).isin(probe)) \
-                 .filter(F.col(id_col).isin(ids))
+    fetch = data.filter(F.col(id_col).isin(ids))
     out = vector_search(fetch, index.vector_col, [float(v) for v in q], k=k,
                         metric=metric, filter=filter,
                         distance_col=distance_col, tiebreaker=tiebreaker,

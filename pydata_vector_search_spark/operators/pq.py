@@ -181,11 +181,12 @@ def ivfpq_search(spark, index, cb: PQCodebooks,
                  round_to: int | None = None) -> DataFrame:
     """IVF×PQ — both ANN tiers composed, the FAISS ``IVFPQ`` layout
     (flat-PQ variant: codes quantize the raw vectors, not centroid
-    residuals): the IVF probe prunes WHICH partitions are scanned
-    (``__cid IN (...)`` partition filter — unprobed directories never
-    opened), PQ shrinks what each scanned row COSTS (ADC table lookups
-    over 1-byte-per-subspace codes), the shortlist is exact re-ranked on
-    true vectors. At 100 TB the probe reads ``nprobe/num_centroids`` of
+    residuals): the IVF probe prunes WHICH partitions are scanned (the
+    scan lists only the probed directories and keeps the ``__cid IN
+    (...)`` partition filter; one Spark job up to 32 probed paths, past
+    which Spark lists them in a parallel job), PQ shrinks what each
+    scanned row COSTS (ADC table lookups over 1-byte-per-subspace
+    codes), the shortlist is exact re-ranked on true vectors. At 100 TB the probe reads ``nprobe/num_centroids`` of
     the corpus at ``m`` bytes per row for ranking — both prune factors
     multiply.
 
@@ -195,11 +196,10 @@ def ivfpq_search(spark, index, cb: PQCodebooks,
     ``nprobe >= num_centroids`` and ``shortlist >=`` probed rows the
     result EQUALS exact KNN (how the declared query oracle-checks the
     whole composed pipeline); pruned recall is pinned in tests."""
-    from pydata_vector_search_spark.operators.ann import (_CID, probe_cids)
+    from pydata_vector_search_spark.operators.ann import (_CID, _probe_scan,
+                                                          probe_cids)
 
-    probe = probe_cids(index, query_vec, nprobe)
-    data = (spark.read.parquet(index.data_path)
-                 .filter(F.col(_CID).isin(probe)))
+    data = _probe_scan(spark, index, probe_cids(index, query_vec, nprobe))
     return pq_search(data, index.vector_col, code_col, cb, query_vec,
                      k=k, shortlist=shortlist, distance_col=distance_col,
                      tiebreaker=tiebreaker, round_to=round_to).drop(_CID)

@@ -446,3 +446,147 @@ def test_ivf_patch_emptied_detection_with_null_id_rows(spark, tmp_path):
     assert f"__cid={null_cid}" not in dirs
     after = spark.read.parquet(idx.data_path)
     assert after.filter(F.col("__cid") == null_cid).count() == 0
+
+
+def _files_per_partition(idx):
+    import glob
+    import os
+
+    return {os.path.basename(d): len(glob.glob(d + "/*.parquet"))
+            for d in glob.glob(idx.data_path + "/__cid=*")}
+
+
+def test_ivf_patch_keeps_rows_of_partition_only_receiving_new_rows(
+        spark, sf_dir, tmp_path):
+    """Dynamic overwrite replaces every partition present in the written
+    data: a partition that holds none of the changed keys but receives a
+    moved row must be rewritten WITH its existing rows. Successive
+    patches keep every partition at exactly one file."""
+    emb = read_table(spark, sf_dir, "embeddings")
+    idx = ann.ivf_build(emb, "embedding", str(tmp_path / "moved"),
+                        num_centroids=8, seed=42)
+    before = {r.vec_id: r["__cid"] for r in
+              spark.read.parquet(idx.data_path)
+                   .select("vec_id", "__cid").collect()}
+    by_cid = {}
+    for vid, cid in sorted(before.items()):
+        by_cid.setdefault(cid, []).append(vid)
+    src, dst = sorted(by_cid, key=lambda c: -len(by_cid[c]))[:2]
+    mover, donor = by_cid[src][0], by_cid[dst][0]
+    donor_vec = emb.filter(F.col("vec_id") == donor) \
+                   .select("embedding").head()[0]
+    batch = (emb.filter(F.col("vec_id") == mover)
+                .withColumn("embedding", F.lit(donor_vec))
+                .withColumn("_deleted", F.lit(False)))
+    out = ann.ivf_patch(spark, idx, batch, "vec_id")
+    assert out == {"removed_partitions": 1, "appended": 1}
+
+    after = {r.vec_id: r["__cid"] for r in
+             spark.read.parquet(idx.data_path)
+                  .select("vec_id", "__cid").collect()}
+    assert after[mover] == dst
+    assert {v for v, c in after.items() if c == dst} == \
+        set(by_cid[dst]) | {mover}
+    assert {v for v, c in after.items() if c == src} == \
+        set(by_cid[src]) - {mover}
+    assert len(after) == len(before)
+    assert set(_files_per_partition(idx).values()) == {1}
+
+    # two more patches: relabels spread over many partitions, then a mix
+    # of deletes and moves
+    ann.ivf_patch(spark, idx,
+                  emb.filter(F.col("vec_id") % 7 == 0)
+                     .withColumn("label", F.lit(5))
+                     .withColumn("_deleted", F.lit(False)), "vec_id")
+    ann.ivf_patch(spark, idx,
+                  emb.filter(F.col("vec_id") % 11 == 1)
+                     .withColumn("embedding", F.lit(donor_vec))
+                     .withColumn("_deleted", F.col("vec_id") % 2 == 0),
+                  "vec_id")
+    files = _files_per_partition(idx)
+    assert files and set(files.values()) == {1}, files
+    final = spark.read.parquet(idx.data_path)
+    deleted = emb.filter((F.col("vec_id") % 11 == 1)
+                         & (F.col("vec_id") % 2 == 0)).count()
+    assert final.count() == emb.count() - deleted
+    assert final.select("vec_id").distinct().count() == final.count()
+
+
+def test_ivf_probe_skips_partition_removed_by_patch(spark, sf_dir, tmp_path):
+    """After an emptying patch deletes a partition directory, a full
+    probe (which names that directory) still equals exact KNN on every
+    tier, and a probe whose only directory is gone returns no rows with
+    the index's columns."""
+    emb = read_table(spark, sf_dir, "embeddings")
+    idx = ann.ivf_build(emb, "embedding", str(tmp_path / "gone"),
+                        num_centroids=4, seed=1)
+    data = spark.read.parquet(idx.data_path)
+    cid = min(((r["__cid"], r["n"]) for r in
+               data.groupBy("__cid").count().withColumnRenamed("count", "n")
+                   .collect()), key=lambda t: t[1])[0]
+    victims = (data.filter(F.col("__cid") == cid)
+                   .select("vec_id", "label", "embedding")
+                   .withColumn("_deleted", F.lit(True))
+                   .localCheckpoint(eager=True))
+    ann.ivf_patch(spark, idx, victims, "vec_id")
+    assert f"__cid={cid}" not in _files_per_partition(idx)
+
+    survivors = emb.join(victims.select("vec_id"), "vec_id", "left_anti")
+    qv = _query(spark, sf_dir)
+    want = [r.vec_id for r in knn.vector_search(
+        survivors, "embedding", qv, k=10, tiebreaker="vec_id").collect()]
+    full = ann.ivf_search(spark, idx, qv, k=10, nprobe=4,
+                          tiebreaker="vec_id")
+    assert [r.vec_id for r in full.collect()] == want
+    assert [r.vec_id for r in ann.ivf_search_int8(
+        spark, idx, qv, "vec_id", k=10, nprobe=4, refine=8,
+        tiebreaker="vec_id").collect()] == want
+
+    gone_q = [float(x) for x in victims.head().embedding]
+    assert ann.probe_cids(idx, gone_q, 1) == [cid]
+    empty = ann.ivf_search(spark, idx, gone_q, k=10, nprobe=1)
+    assert empty.collect() == []
+    assert empty.schema == full.schema
+    assert ann.ivf_search_int8(spark, idx, gone_q, "vec_id", k=10,
+                               nprobe=1).collect() == []
+
+
+def test_ivf_index_rooted_at_file_uri(spark, sf_dir, tmp_path):
+    """An index built and loaded at a ``file://`` URI is probed and
+    patched like one at a plain path: the probe's footer read and
+    directory checks resolve the URI, and the patch builds its key
+    relation with Arrow conversion on or off."""
+    emb = read_table(spark, sf_dir, "embeddings")
+    uri = (tmp_path / "uri").as_uri()
+    ann.ivf_build(emb, "embedding", uri, num_centroids=4, seed=1)
+    idx = ann.IVFIndex.load(spark, uri)
+    qv = _query(spark, sf_dir)
+
+    def exact(df):
+        return [r.vec_id for r in knn.vector_search(
+            df, "embedding", qv, k=10, tiebreaker="vec_id").collect()]
+
+    assert [r.vec_id for r in ann.ivf_search(
+        spark, idx, qv, k=10, nprobe=4, tiebreaker="vec_id").collect()] \
+        == exact(emb)
+
+    data = spark.read.parquet(idx.data_path)
+    cid = ann.probe_cids(idx, qv, 1)[0]
+    victims = (data.filter(F.col("__cid") == cid)
+                   .select("vec_id", "label", "embedding")
+                   .withColumn("_deleted", F.lit(True))
+                   .localCheckpoint(eager=True))
+    conf = "spark.sql.execution.arrow.pyspark.enabled"
+    prior = spark.conf.get(conf)
+    spark.conf.set(conf, "false")
+    try:
+        out = ann.ivf_patch(spark, idx, victims, "vec_id")
+    finally:
+        spark.conf.set(conf, prior)
+    assert out == {"removed_partitions": 1, "appended": 0}
+    assert not (tmp_path / "uri" / "data" / f"__cid={cid}").exists()
+
+    survivors = emb.join(victims.select("vec_id"), "vec_id", "left_anti")
+    assert [r.vec_id for r in ann.ivf_search_int8(
+        spark, idx, qv, "vec_id", k=10, nprobe=4, refine=8,
+        tiebreaker="vec_id").collect()] == exact(survivors)

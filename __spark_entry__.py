@@ -3356,7 +3356,7 @@ def q_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     local-clustering signal that complements components (membership)
     and PageRank (centrality) on the same pair inputs. Exact integers;
     the oracle is a naive canonical-edge three-way self-join
-    (tools/triangle_oracle_draft.sql, validated EXACT at two SFs).
+    (validated EXACT at two SFs).
     Scale design (operators/graph.py:238): degree-ordered orientation
     (Suri & Vassilvitskii WWW'11) bounds every out-neighbourhood at
     O(sqrt(|E|)) regardless of skew, each triangle is generated once at
@@ -4041,8 +4041,7 @@ _INCR_MM_SQL = """
 def _kmeans_oracle_sql(k: int = 8, iterations: int = 3,
                        scale: int = 10 ** 6, offset: float = 1.0) -> str:
     """Integer-exact Lloyd's k-means replayed as an unrolled CTE chain
-    (promoted from tools/kmeans_oracle_draft.py, validated EXACT at
-    sf0.001+sf0.01 in r09; the draft now imports this builder). One
+    (validated EXACT at sf0.001+sf0.01 in r09). One
     recursive CTE cannot express the recurrence — each round reads the
     previous centroids twice (assignment AND the empty-cluster
     fallback), so the chain is unrolled per iteration: quantized
@@ -4121,9 +4120,8 @@ ORDER BY cluster_id, vec_id"""
 
 
 # Per-node triangle counts over the part co-purchase graph, replayed as
-# a naive canonical-edge three-way self-join (promoted verbatim from
-# tools/triangle_oracle_draft.sql, validated EXACT at sf0.001+sf0.01 by
-# tools/validate_triangle_draft.py in r09).
+# a naive canonical-edge three-way self-join (validated EXACT at
+# sf0.001+sf0.01 in r09).
 _TRIANGLE_ORACLE_SQL = """
 WITH pair0 AS (
   SELECT l1.l_partkey AS u, l2.l_partkey AS v
@@ -4157,9 +4155,8 @@ ORDER BY node
 def _bpe_oracle_sql(num_merges: int = 12, min_count: int = 1,
                     min_pair_count: int = 2,
                     max_word_types: int = 1_000_000) -> str:
-    """BPE training replayed step-by-step in SQL (promoted from
-    tools/bpe_oracle_draft.py, validated EXACT at sf0.001+sf0.01 in
-    r09; the draft now imports this builder): the word-frequency table
+    """BPE training replayed step-by-step in SQL (validated EXACT at
+    sf0.001+sf0.01 in r09): the word-frequency table
     (same BPE_ISH_PATTERN pre-tokenization, same count-desc/word-asc
     cap), then ``num_merges`` unrolled stages of [adjacent-pair count
     -> (count desc, left, right) argmax -> greedy LEFT-TO-RIGHT merge
@@ -4217,10 +4214,8 @@ seq{k} AS MATERIALIZED (
 def _semdedup_kmeans_oracle_sql(k: int = 8, iterations: int = 3,
                                 threshold: float = 0.3,
                                 round_to: int = 6) -> str:
-    """Paper-faithful SemDeDup replay (promoted from
-    tools/kmeans_oracle_draft.py ``build_semdedup_kmeans_oracle_sql``,
-    validated EXACT at sf0.001+sf0.01 in r10; the draft now imports
-    this builder): the unrolled kmeans assignment chain + within-
+    """Paper-faithful SemDeDup replay (validated EXACT at
+    sf0.001+sf0.01 in r10): the unrolled kmeans assignment chain + within-
     cluster rounded-cosine pairs + recursive transitive hull +
     min-id-survives anti-join, rolled up per label — the
     `semantic_dedup` declared-query tail verbatim with k-means
@@ -4283,9 +4278,8 @@ _RAW_NT_SQL = r"""len(regexp_split_to_array(trim(text), '\s+'))::BIGINT"""
 
 def _domain_cap_oracle_sql(cap_tokens: int = 600) -> str:
     """Per-domain token cap replayed as the naive per-domain
-    running-sum window (promoted from tools/domain_cap_oracle_draft.py,
-    validated EXACT at sf0.001+sf0.01 in r10; the draft now imports
-    this builder). The declared Spark side is the DISTRIBUTED branch —
+    running-sum window (validated EXACT at sf0.001+sf0.01 in r10).
+    The declared Spark side is the DISTRIBUTED branch —
     the oracle is the single-window spelling it provably equals:
     (quality DESC NULLS LAST, id) order, inclusive running total <=
     cap, token counts coalesced to 0."""
@@ -6616,9 +6610,8 @@ def oracle_sql() -> dict[str, str]:
     # hash-bucket vocabulary (4096, the declared query's bounded-model
     # path; real collisions at sf), floored micro-nat log tables, the
     # closed-form unseen-token accounting, and the (score DESC, label
-    # DESC) argmax — rolled up per predicted class. Validated as
-    # tools/nb_oracle_draft.sql (uncapped) during r08; the bucket
-    # transform is the only addition.
+    # DESC) argmax — rolled up per predicted class. Validated uncapped
+    # during r08; the bucket transform is the only addition.
     d["nb_classify"] = r"""
             WITH toks AS (
                 SELECT doc_id, lang,
@@ -6784,8 +6777,7 @@ def oracle_sql() -> dict[str, str]:
             FROM comp GROUP BY cluster_id ORDER BY cluster_id
         """
     # r10 declarations — each builder validated EXACT at sf0.001+sf0.01
-    # in r09 before promotion (tools/kmeans_oracle_draft.py,
-    # tools/validate_triangle_draft.py, tools/bpe_oracle_draft.py).
+    # in r09 before promotion.
     d["kmeans"] = _kmeans_oracle_sql(k=8, iterations=3)
     d["kmeans_sample"] = _cluster_sample_oracle_sql(k=8, iterations=3,
                                                     per_cluster=10)

@@ -13,9 +13,15 @@ pruning, and optional hive-style partition columns give partition pruning.
 from __future__ import annotations
 
 import json
+import operator
 import os
+import re
 import shutil
-from dataclasses import dataclass, field, asdict
+import time
+import uuid
+from dataclasses import dataclass, field, asdict, replace
+from functools import reduce
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
@@ -35,91 +41,94 @@ class TableInfo:
     has_schema: bool = False          # an explicit schema was given at registration
     indexes: dict = field(default_factory=dict)   # vector_col -> {path, commit}
     aggregates: dict = field(default_factory=dict)  # agg table -> {group_by, sums, count_col, commit}
+    log_gen: int = 0                  # change-log generation (history rewrites start a new one)
+
+
+def _partition_pred(partition_by: list[str], parts: list[tuple]):
+    return reduce(operator.or_, [
+        reduce(operator.and_,
+               [F.col(c).eqNullSafe(F.lit(v))
+                for c, v in zip(partition_by, p)])
+        for p in parts])
 
 
 def overwrite_dir_via_swap(df: DataFrame, path: str,
-                           partition_by: list[str] | None = None) -> None:
-    """FULL-directory COW rewrite in ONE materialization (r16
-    optimization): write ``df`` to a temp sibling directory, then swap
-    it into place with same-filesystem renames.
+                           partition_by: list[str] | None = None,
+                           base: DataFrame | None = None,
+                           touched: list[tuple] | None = None) -> None:
+    """EVERY copy-on-write rewrite of the catalog: Spark writes ``df``
+    (partitioned like the table) into the FRESH directory ``path``, then
+    the files of ``base`` (a scan of the current version) the rewrite
+    leaves alone are hardlinked in. ``base=None``: a full rewrite, nothing
+    linked; ``touched=None``: an append, everything linked; ``touched`` =
+    partition-value tuples: every partition directory except the touched
+    ones, whose files are found from the touched partitions' scan
+    (``_metadata.file_path``) — untouched partitions are never opened,
+    and their files keep their inodes.
 
-    Replaces the ``localCheckpoint(eager=True)`` + ``mode("overwrite")``
-    idiom, which materializes the whole table TWICE (once into executor
-    storage, once into parquet) purely so the overwrite does not delete
-    the files its own input is still reading. Writing to a sibling
-    leaves the current files readable until the write has fully
-    committed, so the plan runs exactly once — at 100 TB that is one
-    full table write saved per COW commit. Only for FULL rewrites;
-    dynamic partition overwrites (which surgically replace a subset of
-    partition directories) keep the checkpoint idiom.
+    Nothing staged here is visible until the caller's one atomic replace
+    of ``_catalog.json`` (``Catalog._commit``); a crash before it leaves
+    an unreferenced directory that the next attach deletes. The current
+    version stays intact throughout, so ``df`` may read it — one
+    materialization, no checkpoint. The name predates this protocol (it
+    used to rename-swap a temp sibling into place) and stays because
+    tracing tools patch this module-level function by name.
 
-    LOCAL-FS ONLY (r17 hardening): relies on same-filesystem atomic
-    directory ``os.rename`` — object stores have no rename; deployments
-    on S3/GCS must route full rewrites through the checkpoint+overwrite
-    idiom instead (``catalog.write`` without ``_swap``). Crash safety:
-    the order is (1) write the tmp sibling, (2) rename current → old,
-    (3) rename tmp → current, (4) delete old. A crash before (2) leaves
-    the table untouched plus a tmp sibling; between (2) and (3) the
-    table dir is briefly ABSENT but the complete old sibling remains.
-    Sibling names are DOT-PREFIXED (``.<name>.__swap_tmp`` /
-    ``.<name>.__swap_old``) so Spark's hidden-path filter ignores any
-    residue during partition discovery — a stranded plain-named sibling
-    inside a ``commit=``-partitioned changes root would otherwise parse
-    as a partition value. ``Catalog`` attach sweeps residue: tmp dirs
-    are deleted, an old dir whose target is missing is restored
-    (``_sweep_swap_residue``).
+    INVARIANT (load-bearing for every link): part files are immutable —
+    a rewrite lands NEW files and never modifies one in place. Linked
+    files are shared between versions, and ``commit=1`` of a keyed table
+    shares the bootstrap files' inodes, so an in-place writer would
+    silently rewrite history. LOCAL-FS ONLY (hardlinks)."""
+    def local(uri):               # URIs arrive percent-escaped
+        return unquote(urlparse(uri).path)
 
-    INVARIANT (load-bearing for the hardlinked commit-1 bootstrap,
-    ``Catalog.write``): snapshot rewrites must always land NEW part
-    files and unlink the old ones — exactly what this swap and the
-    checkpoint+overwrite idiom both do — never modify a part file in
-    place. ``commit=1`` of a keyed table shares the bootstrap files'
-    inodes, so an in-place writer would silently rewrite history."""
-    parent, base = os.path.split(path.rstrip("/"))
-    tmp = os.path.join(parent, f".{base}.__swap_tmp")
-    old = os.path.join(parent, f".{base}.__swap_old")
-    shutil.rmtree(tmp, ignore_errors=True)
+    skip = set()
+    if base is not None and touched:
+        # one row per file (its first), so no distinct shuffle
+        skip = {os.path.dirname(local(r[0])) for r in
+                base.filter(_partition_pred(partition_by, touched))
+                    .filter(F.col("_metadata.row_index") == 0)
+                    .select("_metadata.file_path").collect()}
     writer = df.write.mode("overwrite")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
-    writer.parquet(tmp)
-    shutil.rmtree(old, ignore_errors=True)
-    if os.path.isdir(path):
-        os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old, ignore_errors=True)
-
-
-def _sweep_swap_residue(root: str, _depth: int = 0) -> None:
-    """Attach-time cleanup of dirs stranded by a crash mid-swap
-    (r17 hardening): ``.<name>.__swap_tmp`` is an incomplete write —
-    delete; ``.<name>.__swap_old`` whose target is missing means the
-    crash hit between the two renames — RESTORE it (it is the complete
-    pre-rewrite table); with the target present it is a finished swap's
-    leftover — delete. Recurses one level into ``*__changes`` roots
-    (commit-dir rewrites swap too). Bounded by the catalog's own entry
-    count — no data files are ever opened."""
-    try:
-        entries = os.listdir(root)
-    except OSError:
+    writer.parquet(path)
+    if base is None:
         return
-    for d in entries:
-        p = os.path.join(root, d)
-        if d.startswith(".") and d.endswith(".__swap_tmp"):
-            shutil.rmtree(p, ignore_errors=True)
-        elif d.startswith(".") and d.endswith(".__swap_old"):
-            target = os.path.join(root, d[1:-len(".__swap_old")])
-            if os.path.exists(target):
-                shutil.rmtree(p, ignore_errors=True)
-            else:
-                os.rename(p, target)
-        elif (_depth == 0 and d.endswith("__changes")
-              and os.path.isdir(p)):
-            _sweep_swap_residue(p, 1)
+    depth = len(partition_by or []) + 1     # partition dirs + file name
+    for src in map(local, base.inputFiles()):
+        if os.path.dirname(src) in skip:
+            continue
+        dst = os.path.join(path, *src.split(os.sep)[-depth:])
+        os.makedirs(os.path.dirname(dst), exist_ok=True)
+        os.link(src, dst)
+
+
+def _without(snap: DataFrame, doomed: DataFrame, keep_cond,
+             partition_by: list[str]) -> tuple:
+    """``(df, base, touched)`` for ``overwrite_dir_via_swap`` to drop the
+    ``doomed`` rows of ``snap``: the whole kept table, or only the kept
+    rows of the partitions holding doomed rows."""
+    if not partition_by:
+        return snap.filter(keep_cond), None, None
+    touched = [tuple(r) for r in
+               doomed.select(*partition_by).distinct().collect()]
+    return (snap.filter(_partition_pred(partition_by, touched))
+                .filter(keep_cond), snap, touched)
 
 
 class Catalog:
-    """File-backed catalog so sessions can reattach to existing tables."""
+    """File-backed catalog so sessions can reattach to existing tables.
+
+    ONE commit point, the timeline pointer of the reference's Hudi table:
+    every write, upsert, delete, merge, compaction, purge and expiry
+    stages new immutable directories — a snapshot version
+    ``<root>/<name>/v<id>``, ``commit=N`` directories of the change log
+    ``<root>/<name>__changes`` (``__changes_g<N>`` after a history
+    rewrite) — then publishes them with one atomic replace of
+    ``_catalog.json`` (``_commit``). After a crash at any step, a
+    reattached catalog shows the state before the operation or the state
+    after it, and deletes whatever the metadata does not reference."""
 
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
@@ -128,17 +137,78 @@ class Catalog:
         self._meta_path = os.path.join(root, "_catalog.json")
         self._tables: dict[str, TableInfo] = {}
         self._schemas: dict = {}      # session-scoped explicit schemas (not persisted)
+        if os.path.exists(self._meta_path + ".tmp"):   # torn persist
+            os.remove(self._meta_path + ".tmp")
         if os.path.exists(self._meta_path):
             with open(self._meta_path) as f:
                 for name, info in json.load(f).items():
                     self._tables[name] = TableInfo(**info)
             # only a REATTACH can see residue from a crashed writer; a
             # fresh catalog root has nothing to sweep
-            _sweep_swap_residue(root)
+            self._sweep()
 
-    def _persist(self) -> None:
-        with open(self._meta_path, "w") as f:
-            json.dump({n: asdict(t) for n, t in self._tables.items()}, f, indent=2)
+    def _managed(self, name: str, info: TableInfo) -> bool:
+        return (not info.num_buckets and info.format == "parquet"
+                and not info.options and not info.has_schema
+                and os.path.join(self.root, name)
+                in (info.path, os.path.dirname(info.path)))
+
+    def _sweep(self) -> None:
+        """Attach-time garbage collection of managed tables: delete other
+        entries of ``<root>/<name>/``, other log generations, and commit
+        directories outside ``[history_start, last_commit]``. No data
+        file is opened."""
+        entries = os.listdir(self.root)
+        for name, info in self._tables.items():
+            if not self._managed(name, info):
+                continue
+            tdir = os.path.join(self.root, name)
+            if info.path == tdir:
+                # snapshot files directly in the table directory: a
+                # catalog written before versioned snapshots. A new
+                # version would nest inside the old one and be deleted
+                # with it.
+                raise ValueError(
+                    f"table {name!r} at {tdir!r} uses the unversioned "
+                    "catalog layout; re-ingest it into a new catalog root")
+            for d in os.listdir(tdir):
+                if os.path.join(tdir, d) != info.path:
+                    shutil.rmtree(os.path.join(tdir, d), ignore_errors=True)
+            croot = self._changes_root(name, info.log_gen)
+            gen = re.compile(re.escape(name) + r"__changes(_g\d+)?")
+            for d in entries:
+                p = os.path.join(self.root, d)
+                if gen.fullmatch(d) and p != croot:
+                    shutil.rmtree(p, ignore_errors=True)
+            for d in (os.listdir(croot) if os.path.isdir(croot) else ()):
+                m = re.fullmatch(r"commit=(\d+)", d)
+                if m and not (info.history_start <= int(m.group(1))
+                              <= info.last_commit):
+                    shutil.rmtree(os.path.join(croot, d), ignore_errors=True)
+
+    def _persist(self, tables: dict[str, TableInfo] | None = None) -> None:
+        """Durable, atomic metadata write: a fsynced temp file
+        ``os.replace``d over ``_catalog.json`` — never a torn file."""
+        tables = self._tables if tables is None else tables
+        tmp = self._meta_path + ".tmp"
+        with open(tmp, "w") as f:
+            json.dump({n: asdict(t) for n, t in tables.items()}, f, indent=2)
+            f.flush()
+            os.fsync(f.fileno())
+        os.replace(tmp, self._meta_path)
+
+    def _commit(self, info: TableInfo, garbage=()) -> TableInfo:
+        """THE commit point: persist ``info``, adopt it in memory only once
+        that succeeded, then delete ``garbage`` — the directories only the
+        previous state referenced (a crash leaves it to the next attach)."""
+        self._persist({**self._tables, info.name: info})
+        self._tables[info.name] = info
+        for p in garbage:
+            shutil.rmtree(p, ignore_errors=True)
+        return info
+
+    def _new_version(self, name: str) -> str:
+        return os.path.join(self.root, name, f"v{uuid.uuid4().hex[:16]}")
 
     # -- registration ------------------------------------------------------
     def register_path(self, name: str, path: str, key: str | None = None,
@@ -160,97 +230,90 @@ class Catalog:
         self._persist()
         return info
 
-    def write(self, name: str, df: DataFrame, key: str | None = None,
-              mode: str = "overwrite", partition_by: list[str] | None = None,
-              reset_history: bool = True, _swap: bool = False) -> TableInfo:
-        """Write a managed table (reference S3: mode('overwrite') write, c8:26).
-
-        A fresh write is commit 1 (the bootstrap load) and clears any
-        previous change log; maintenance rewrites (compaction) pass
-        ``reset_history=False`` to preserve commit history.
-
-        Refuses to overwrite an EXTERNAL (registered path / non-parquet /
+    def _check_managed(self, name: str) -> TableInfo | None:
+        """Refuse to rewrite an EXTERNAL (registered path / non-parquet /
         explicit-schema) or BUCKETED registration: rebuilding those as a
         managed parquet table would silently change the table's path,
-        format, and bucket metadata out from under readers (upsert and
-        compact route through here, so they inherit the guard). Drop or
-        re-register the name first."""
-        path = os.path.join(self.root, name)
+        format, and bucket metadata out from under readers."""
         prior = self._tables.get(name)
-        if prior is not None and (
-                prior.num_buckets or prior.format != "parquet"
-                or prior.options or prior.has_schema or prior.path != path):
+        if prior is not None and not self._managed(name, prior):
             kind = "bucketed" if prior.num_buckets else "external"
             raise ValueError(
                 f"table {name!r} is a {kind} registration "
                 f"(format={prior.format!r}, path={prior.path!r}); "
-                "write/upsert/compact would silently convert it to a "
-                "managed parquet table — drop() it or register a new name")
-        if _swap and mode == "overwrite":
-            # COW rewrite whose input reads this very table (upsert /
-            # delete / compact): one write into a temp sibling + rename
-            # instead of checkpoint-then-overwrite (see
-            # overwrite_dir_via_swap)
-            overwrite_dir_via_swap(df, path, partition_by)
-        else:
-            writer = df.write.mode(mode)
-            if partition_by:
-                writer = writer.partitionBy(*partition_by)
-            writer.parquet(path)
-        prev = self._tables.get(name)
-        if reset_history:
-            shutil.rmtree(self._changes_root(name), ignore_errors=True)
-        last = 1 if reset_history or prev is None else prev.last_commit
-        # COW rewrites (upsert/compact/delete) keep index registrations —
-        # staleness is judged from last_commit, not dropped metadata; a
-        # fresh bootstrap (reset_history) is new table content, so prior
-        # registrations are cleared.
-        idx = {} if reset_history or prev is None else dict(prev.indexes)
-        ag = {} if reset_history or prev is None else dict(prev.aggregates)
-        ct = {} if reset_history or prev is None else dict(prev.commit_times)
-        hs = 1 if reset_history or prev is None else prev.history_start
-        info = TableInfo(name=name, path=path, key=key,
+                "a rewrite (write/upsert/delete/merge/compact/purge) would "
+                "silently convert it to a managed parquet table — drop() "
+                "it or register a new name")
+        return prior
+
+    def write(self, name: str, df: DataFrame, key: str | None = None,
+              mode: str = "overwrite", partition_by: list[str] | None = None,
+              reset_history: bool = True) -> TableInfo:
+        """Write a managed table (reference S3: mode('overwrite') write, c8:26).
+
+        A fresh write is commit 1 (the bootstrap load) and starts a new,
+        empty change log; maintenance rewrites (compaction) pass
+        ``reset_history=False`` to preserve commit history. ``df`` lands
+        in a fresh snapshot version (``mode="append"`` links the current
+        files in), so it may read the table it replaces. Commit point:
+        the one ``_catalog.json`` replace at the end — a crash before it
+        keeps the previous table and log, which are deleted after it.
+        Refuses external or bucketed registrations (``_check_managed``)."""
+        prior = self._check_managed(name)
+        info = TableInfo(name=name, path=self._new_version(name), key=key,
                          partition_by=list(partition_by or []),
-                         last_commit=last, indexes=idx, aggregates=ag,
-                         commit_times=ct, history_start=hs)
-        self._tables[name] = info
-        self._persist()
+                         last_commit=1)
+        garbage = []
+        if prior is not None:
+            garbage.append(prior.path)
+            if reset_history:
+                info.log_gen = prior.log_gen + 1
+                garbage.append(self._changes_root(name, prior.log_gen))
+            else:
+                # COW rewrites keep history and index/aggregate
+                # registrations — staleness is judged from last_commit,
+                # not dropped metadata; a fresh bootstrap
+                # (reset_history) is new table content, so prior
+                # registrations are cleared.
+                info = replace(prior, path=info.path, key=key,
+                               partition_by=info.partition_by)
+        overwrite_dir_via_swap(
+            df, info.path, partition_by,
+            base=self.load(name) if mode == "append" and prior else None)
+        if reset_history:         # the new log starts empty
+            shutil.rmtree(self._changes_root(name, info.log_gen),
+                          ignore_errors=True)
         if reset_history and key is not None:
             # Record the bootstrap as commit 1 so the change log is a
             # COMPLETE history and ``read_asof`` can reconstruct any
             # commit by replay. NON-PARTITIONED snapshots are HARDLINKED
             # into the commit=1 log partition (r16 optimization): the
-            # files are immutable (every rewrite swaps in new files and
-            # unlinks, never mutates), so a link is byte-equivalent to
-            # the full columnar copy the old Spark job wrote, at zero
-            # I/O and zero extra storage. The linked files lack the
-            # ``_deleted`` column; every log reader already treats an
-            # absent/NULL ``_deleted`` as false (mergeSchema +
-            # coalesce — the pre-``_deleted``-era compatibility path),
-            # so replay semantics are identical. Partitioned snapshots
-            # keep the Spark-write copy: their partition columns live in
-            # DIRECTORY names, and nesting them under commit=1/ would
-            # give the log inconsistent partition depths. Keyless
-            # tables skip it (no merge identity → no time travel).
+            # files are immutable (see overwrite_dir_via_swap), so a
+            # link is byte-equivalent to the full columnar copy a Spark
+            # job would write, at zero I/O and zero extra storage. The
+            # linked files lack the ``_deleted`` column; every log
+            # reader already treats an absent/NULL ``_deleted`` as false
+            # (mergeSchema + coalesce — the pre-``_deleted``-era
+            # compatibility path), so replay semantics are identical.
+            # Partitioned snapshots keep the Spark-write copy: their
+            # partition columns live in DIRECTORY names, and nesting
+            # them under commit=1/ would give the log inconsistent
+            # partition depths. Keyless tables skip it (no merge
+            # identity → no time travel).
+            boot = os.path.join(self._changes_root(name, info.log_gen),
+                                "commit=1")
             if not partition_by:
-                import time as _time
-                boot = os.path.join(self._changes_root(name), "commit=1")
-                shutil.rmtree(boot, ignore_errors=True)
                 os.makedirs(boot)
-                for f in os.listdir(path):
+                for f in os.listdir(info.path):
                     if f.endswith(".parquet"):
-                        try:
-                            os.link(os.path.join(path, f),
-                                    os.path.join(boot, f))
-                        except OSError:       # cross-device: plain copy
-                            shutil.copy2(os.path.join(path, f),
-                                         os.path.join(boot, f))
-                info.commit_times["1"] = _time.time()
-                self._persist()
+                        os.link(os.path.join(info.path, f),
+                                os.path.join(boot, f))
             else:
-                self.log_commit(name, self.spark.read.parquet(path),
-                                commit=1)
-        return info
+                (self.spark.read.parquet(info.path)
+                     .withColumn("_deleted", F.lit(False))
+                     .write.mode("overwrite").parquet(boot))
+            info.commit_times["1"] = time.time()
+        return self._commit(info, garbage)
 
     def write_bucketed(self, name: str, df: DataFrame, key: str,
                        num_buckets: int = 32,
@@ -273,8 +336,13 @@ class Catalog:
         return info
 
     # -- incremental / CDC (the reference stack's Hudi incremental pull) ----
-    def _changes_root(self, name: str) -> str:
-        return os.path.join(self.root, f"{name}__changes")
+    def _changes_root(self, name: str, gen: int | None = None) -> str:
+        """The change log of generation ``gen`` (default: the table's
+        current one). Generation 0 is ``<name>__changes``."""
+        if gen is None:
+            gen = self._tables[name].log_gen if name in self._tables else 0
+        return os.path.join(self.root,
+                            f"{name}__changes" + (f"_g{gen}" if gen else ""))
 
     def log_commit(self, name: str, batch: DataFrame,
                    op: str = "upsert", commit: int | None = None) -> int:
@@ -282,31 +350,71 @@ class Catalog:
 
         The log is hive-partitioned by commit id (``commit=N/``), so an
         incremental read of commits > N is a PARTITION-PRUNED scan — cost
-        proportional to the changed data, never to the table. Called by
-        ``upsert_table`` with the upsert batch and by ``delete_where``
-        with the removed rows as TOMBSTONES (``_deleted = true`` — the
-        CDC convention that lets incremental consumers retract); the
-        snapshot itself holds no history (it stays a plain COW parquet
-        table).
+        proportional to the changed data, never to the table. Upserts log
+        their batch, ``delete_where`` the removed rows as TOMBSTONES
+        (``_deleted = true`` — the CDC convention that lets incremental
+        consumers retract); the snapshot itself holds no history (it
+        stays a plain COW parquet table).
 
-        An explicit ``commit`` writes that log partition without bumping
-        ``last_commit`` — used by ``write`` to record the bootstrap as
-        commit 1 (the basis for ``read_asof`` time travel)."""
-        import time
+        Called on its own it writes commit ``last_commit + 1``, advances
+        ``last_commit`` and persists. An explicit ``commit`` only STAGES
+        that directory; ``_rewrite`` advances ``last_commit`` over it in
+        its one final persist (readers ignore commits above it)."""
+        if commit is not None:
+            (batch.withColumn("_deleted", F.lit(op == "delete"))
+                  .write.mode("overwrite").parquet(os.path.join(
+                      self._changes_root(name), f"commit={commit}")))
+            return commit
+        return self._rewrite(name, None, [(batch, op)]).last_commit
 
+    def _rewrite(self, name: str, df: DataFrame | None, changes=(),
+                 base: DataFrame | None = None,
+                 touched: list[tuple] | None = None) -> TableInfo:
+        """Commit one keyed change: ``changes`` ((batch, op) pairs) become
+        the next commit directories, ``df`` (if given) a fresh snapshot
+        version (see ``overwrite_dir_via_swap``), and one ``_commit``
+        publishes ``last_commit`` and the new path together."""
         info = self._tables[name]
-        bump = commit is None
-        commit = info.last_commit + 1 if commit is None else commit
-        (batch.withColumn("_deleted", F.lit(op == "delete"))
-              .write.mode("overwrite").parquet(
-                  os.path.join(self._changes_root(name), f"commit={commit}")))
-        # wall-clock instant of the commit (the Hudi-timeline timestamp),
-        # enabling read_asof_timestamp; stored as JSON-string keys
-        info.commit_times[str(commit)] = time.time()
-        if bump:
-            info.last_commit = commit
-        self._persist()
-        return commit
+        if df is not None:
+            self._check_managed(name)
+        new = replace(info, commit_times=dict(info.commit_times))
+        for batch, op in changes:
+            new.last_commit = self.log_commit(name, batch, op,
+                                              commit=new.last_commit + 1)
+            # wall-clock instant of the commit (the Hudi-timeline
+            # timestamp), enabling read_asof_timestamp; stored as
+            # JSON-string keys
+            new.commit_times[str(new.last_commit)] = time.time()
+        if df is None:
+            return self._commit(new)
+        new.path = self._new_version(name)
+        overwrite_dir_via_swap(df, new.path, info.partition_by, base, touched)
+        return self._commit(new, [info.path])
+
+    def _log(self, name: str) -> DataFrame:
+        """The committed log (commits up to ``last_commit``), ``_deleted``
+        non-NULL. mergeSchema: the log mixes pre-``_deleted`` files (and
+        the hardlinked bootstrap) with current ones; without it the schema
+        is picked from one footer and the tombstone column can vanish."""
+        df = (self.spark.read.option("mergeSchema", "true")
+              .parquet(self._changes_root(name))
+              .filter(F.col("commit") <= self._tables[name].last_commit))
+        if "_deleted" not in df.columns:
+            return df.withColumn("_deleted", F.lit(False))
+        return df.withColumn("_deleted",
+                             F.coalesce(F.col("_deleted"), F.lit(False)))
+
+    def _new_log_gen(self, info: TableInfo, df: DataFrame,
+                     commits: list[int]) -> int:
+        """Stage the next log generation for a history rewrite: ``df``
+        (rows with a ``commit`` column) replaces the ``commits``
+        directories in one Spark write, and every other commit directory
+        is hardlinked. It becomes current in the caller's ``_commit``."""
+        gen = info.log_gen + 1
+        overwrite_dir_via_swap(df, self._changes_root(info.name, gen),
+                               ["commit"], base=self._log(info.name),
+                               touched=[(c,) for c in commits])
+        return gen
 
     def current_commit(self, name: str) -> int:
         return self._tables[name].last_commit
@@ -318,7 +426,8 @@ class Catalog:
         ``latest_only`` keeps one row per record key (the latest commit's
         value) when the same key was upserted several times in the range —
         the semantics a downstream incremental consumer wants. The returned
-        frame carries a ``commit`` column.
+        frame carries a ``commit`` column. Only commits up to
+        ``last_commit`` are read (later ones are staged, not committed).
 
         Commit 1 is the bootstrap load and lives only in the snapshot;
         consumers start from ``since_commit >= 1``."""
@@ -333,22 +442,13 @@ class Catalog:
                 f"(expire_commits); an incremental read since "
                 f"{since_commit} cannot be served faithfully — re-bootstrap "
                 "the consumer from the snapshot")
-        croot = self._changes_root(name)
-        if since_commit >= info.last_commit or not os.path.isdir(croot):
+        if (since_commit >= info.last_commit
+                or not os.path.isdir(self._changes_root(name))):
             empty = (self.load(name)
                      .withColumn("_deleted", F.lit(False))
                      .withColumn("commit", F.lit(0).cast("int")))
             return empty.filter(F.lit(False))
-        # mergeSchema: a persisted catalog can mix pre-``_deleted`` commit
-        # files with current ones; without it the schema is picked from one
-        # footer and the tombstone column can vanish for incremental readers.
-        df = (self.spark.read.option("mergeSchema", "true").parquet(croot)
-              .filter(F.col("commit") > since_commit))
-        if "_deleted" not in df.columns:
-            df = df.withColumn("_deleted", F.lit(False))
-        else:
-            df = df.withColumn("_deleted",
-                               F.coalesce(F.col("_deleted"), F.lit(False)))
+        df = self._log(name).filter(F.col("commit") > since_commit)
         if latest_only and info.key:
             w = Window.partitionBy(info.key).orderBy(F.col("commit").desc())
             df = (df.withColumn("__rn", F.row_number().over(w))
@@ -397,15 +497,11 @@ class Catalog:
                 f"table {name!r} has no base commit in its change "
                 "log (created before bootstrap logging, or history was "
                 "compacted away); read_asof cannot replay")
-        df = (self.spark.read.option("mergeSchema", "true")
-              .parquet(self._changes_root(name))
-              .filter(F.col("commit") <= commit))
-        if "_deleted" not in df.columns:
-            df = df.withColumn("_deleted", F.lit(False))
+        df = self._log(name).filter(F.col("commit") <= commit)
         w = Window.partitionBy(info.key).orderBy(F.col("commit").desc())
         return (df.withColumn("__rn", F.row_number().over(w))
                   .filter(F.col("__rn") == 1)
-                  .filter(~F.coalesce(F.col("_deleted"), F.lit(False)))
+                  .filter(~F.col("_deleted"))
                   .drop("__rn", "_deleted", "commit"))
 
     def read_asof_timestamp(self, name: str, ts) -> DataFrame:
@@ -433,8 +529,8 @@ class Catalog:
     def expire_commits(self, name: str, upto: int) -> None:
         """Commit-log retention (the lakehouse VACUUM for the timeline):
         collapse commits < ``upto`` into one materialized base — the
-        table's full state AS OF ``upto`` written into the ``commit=upto``
-        log partition — and delete the older commit directories.
+        table's full state AS OF ``upto`` written as the ``commit=upto``
+        log partition — and drop the older commits.
 
         Afterwards: ``read_asof(c >= upto)`` replays from the collapsed
         base (time travel keeps working for retained history);
@@ -443,11 +539,13 @@ class Catalog:
         wrong reconstructions. Without retention the log grows with every
         commit forever — at 100 TB the timeline itself becomes a table.
 
-        Run it when no CDC tail is mid-stream over the expired range: the
-        collapsed base lands as NEW files in ``commit=upto``, which a
-        file-source checkpoint that already consumed the original batch
-        will deliver again (the standard retention/compaction caveat for
-        log consumers)."""
+        The collapsed log is a new log generation (``_new_log_gen``: the
+        base in one write, later commits hardlinked), switched to by one
+        ``_catalog.json`` replace; a crash before it keeps the full
+        history, and the old generation is deleted only after it. A
+        running CDC tail (``streaming.read_changes_stream``) follows the
+        old generation's directory and must be restarted afterwards, from
+        the snapshot: the collapsed base is new files under a new root."""
         info = self._tables[name]
         if upto <= info.history_start:
             return
@@ -455,22 +553,16 @@ class Catalog:
             raise ValueError(
                 f"cannot expire through commit {upto}: table "
                 f"{name!r} is at commit {info.last_commit}")
-        # swap write (r16): the as-of state READS commit=upto (among
-        # others), so the old code checkpointed it before overwriting;
-        # writing to a temp sibling + rename keeps the source readable
-        # through the single write. Older commit dirs are only deleted
-        # after the swap lands.
-        croot = self._changes_root(name)
-        overwrite_dir_via_swap(
-            self.read_asof(name, upto).withColumn("_deleted", F.lit(False)),
-            os.path.join(croot, f"commit={upto}"))
-        for c in range(info.history_start, upto):
-            shutil.rmtree(os.path.join(croot, f"commit={c}"),
-                          ignore_errors=True)
-        info.history_start = upto
-        info.commit_times = {c: t for c, t in info.commit_times.items()
-                             if int(c) >= upto}
-        self._persist()
+        base = (self.read_asof(name, upto)
+                    .withColumn("_deleted", F.lit(False))
+                    .withColumn("commit", F.lit(upto)))
+        gen = self._new_log_gen(info, base,
+                                list(range(info.history_start, upto + 1)))
+        self._commit(replace(info, history_start=upto, log_gen=gen,
+                             commit_times={c: t for c, t in
+                                           info.commit_times.items()
+                                           if int(c) >= upto}),
+                     [self._changes_root(name)])
 
     # -- vector indexes (table-scoped, like the reference's Lance index) ---
     def register_index(self, table: str, vector_col: str, path: str,
@@ -544,12 +636,11 @@ class Catalog:
             df = df.repartition(n, *info.partition_by)
         else:
             df = df.repartition(n)
-        # swap write (r16): the rewrite reads the files it replaces, so
-        # the old code checkpointed the whole table first — one write
-        # into a temp sibling + rename does it in a single pass
+        # one pass: the rewrite reads the current version while writing
+        # a new one (see overwrite_dir_via_swap)
         self.write(name, df, key=info.key,
                    partition_by=info.partition_by or None,
-                   reset_history=False, _swap=True)
+                   reset_history=False)
 
     def purge_keys(self, name: str, keys: list, key: str | None = None,
                    max_keys: int = 1_000_000) -> dict:
@@ -566,28 +657,31 @@ class Catalog:
         tombstone row records the purged key's prior image.
 
         Cost: PARTITIONED snapshots rewrite only the partitions that
-        contain a purged key (dynamic partition overwrite, same
-        economics as ``merge_into``/``delete_where``; a partition left
-        empty has its directory dropped explicitly); unpartitioned
-        snapshots pay one full COW. Plus one filtered rewrite per commit
-        dir that actually contains a purged key (checked with an early-
-        terminating probe), plus a pruned partition rewrite per
+        contain a purged key (the others are hardlinked into the new
+        version, same economics as ``merge_into``/``delete_where``; a
+        partition left empty is simply not written); unpartitioned
+        snapshots pay one full COW. The commits holding a purged key are
+        rewritten in ONE Spark write into a new log generation, the
+        other commits hardlinked; plus a pruned partition rewrite per
         registered index. ``keys`` is a driver-side list by design
         (erasure requests are bounded); ``max_keys`` guards against
         abuse of that assumption.
+
+        Commit point: the new snapshot version and the new log
+        generation are switched to by ONE ``_catalog.json`` replace — a
+        crash before it keeps the unpurged table and history, after it
+        both are purged (old files are deleted after the replace). The
+        index and aggregate rewrites follow that commit. A running CDC
+        tail (``streaming.read_changes_stream``) follows the old log
+        generation's directory and must be restarted afterwards, from the
+        snapshot.
 
         NULL-key rows are never purge targets: every keep-filter uses
         ``NOT coalesce(hit, false)`` so SQL three-valued logic cannot
         silently drop them (``~isin`` alone evaluates to NULL on a NULL
         key and would destroy data beyond the request)."""
-        from pyspark.sql import functions as F
-
+        self._check_managed(name)
         info = self._tables[name]
-        if info.num_buckets or info.format != "parquet" or info.has_schema:
-            raise ValueError(
-                f"table {name!r} is a bucketed/external registration; "
-                "purge rewrites raw parquet and would break its metadata "
-                "— rebuild it as a managed table first")
         key = key or info.key
         if key is None:
             raise ValueError(
@@ -606,46 +700,28 @@ class Catalog:
         snap = self.load(name)
         doomed = snap.filter(hit).localCheckpoint(eager=True)
         n_purged = doomed.count()
-        if n_purged and info.partition_by:
-            # Rewrite only the partitions holding purged keys (dynamic
-            # overwrite); drop directories of partitions left empty.
-            from pydata_vector_search_spark.operators.upsert import (
-                _emptied_partition_dirs, _partition_pred)
-            touched = [tuple(r) for r in
-                       doomed.select(*info.partition_by).distinct()
-                             .collect()]
-            kept = (snap.filter(_partition_pred(info.partition_by,
-                                                touched))
-                        .filter(keep_cond).localCheckpoint(eager=True))
-            survivors = {tuple(r) for r in
-                         kept.select(*info.partition_by).distinct()
-                             .collect()}
-            emptied = [p for p in touched if p not in survivors]
-            empty_dirs = _emptied_partition_dirs(snap, info.partition_by,
-                                                 emptied)
-            (kept.write.mode("overwrite")
-                 .option("partitionOverwriteMode", "dynamic")
-                 .partitionBy(*info.partition_by).parquet(info.path))
-            for d in empty_dirs:
-                shutil.rmtree(d, ignore_errors=True)
-        elif n_purged:
-            # swap write (r16) — one materialization instead of two
-            overwrite_dir_via_swap(snap.filter(keep_cond), info.path)
+        new, garbage = replace(info), []
+        if n_purged:
+            df, base, touched = _without(snap, doomed, keep_cond,
+                                         info.partition_by)
+            new.path = self._new_version(name)
+            overwrite_dir_via_swap(df, new.path, info.partition_by, base,
+                                   touched)
+            garbage.append(info.path)
 
-        commits_rewritten = 0
-        root = self._changes_root(name)
-        if os.path.isdir(root):
-            for d in sorted(os.listdir(root)):
-                cdir = os.path.join(root, d)
-                if not (d.startswith("commit=") and os.path.isdir(cdir)):
-                    continue
-                cdf = self.spark.read.parquet(cdir)
-                if key not in cdf.columns:
-                    continue
-                if cdf.filter(hit).limit(1).count() == 0:
-                    continue
-                overwrite_dir_via_swap(cdf.filter(keep_cond), cdir)
-                commits_rewritten += 1
+        commits = []
+        if os.path.isdir(self._changes_root(name)):
+            log = self._log(name)
+            if key in log.columns:
+                commits = sorted(r[0] for r in log.filter(hit)
+                                 .select("commit").distinct().collect())
+            if commits:
+                new.log_gen = self._new_log_gen(
+                    info, log.filter(F.col("commit").isin(commits))
+                             .filter(keep_cond), commits)
+                garbage.append(self._changes_root(name))
+        if garbage:
+            self._commit(new, garbage)
 
         indexes_patched = []
         for vcol, entry in info.indexes.items():
@@ -662,9 +738,17 @@ class Catalog:
                 continue
             keep_idx = (idx.filter(F.col("__cid").isin(touched))
                            .filter(keep_cond).localCheckpoint(eager=True))
+            survivors = {r[0] for r in
+                         keep_idx.select("__cid").distinct().collect()}
             (keep_idx.write.mode("overwrite")
                      .option("partitionOverwriteMode", "dynamic")
                      .partitionBy("__cid").parquet(data_path))
+            # a partition whose rows were ALL purged contributes nothing
+            # to the dynamic overwrite, so its old file would survive —
+            # drop it, as ivf_patch does (probes skip missing partitions)
+            for c in set(touched) - survivors:
+                shutil.rmtree(os.path.join(data_path, f"__cid={c}"),
+                              ignore_errors=True)
             indexes_patched.append(vcol)
 
         # Materialized aggregates still CONTAIN the purged rows'
@@ -685,18 +769,22 @@ class Catalog:
         if aggs_rebuilt:
             self._persist()
 
-        return {"purged": n_purged, "commits_rewritten": commits_rewritten,
+        return {"purged": n_purged, "commits_rewritten": len(commits),
                 "indexes_patched": indexes_patched,
                 "aggregates_rebuilt": aggs_rebuilt}
 
     def drop(self, name: str, delete_files: bool = True) -> None:
         """Table drop (reference S7: shutil.rmtree(TABLE_PATH), c8:10-11)."""
-        info = self._tables.pop(name, None)
-        self._persist()
+        info = self._tables.get(name)
+        self._persist({n: t for n, t in self._tables.items() if n != name})
+        self._tables.pop(name, None)
         if info and delete_files and info.path.startswith(self.root):
-            shutil.rmtree(info.path, ignore_errors=True)
+            shutil.rmtree(os.path.join(self.root, name)
+                          if self._managed(name, info) else info.path,
+                          ignore_errors=True)
         if info and delete_files:
-            shutil.rmtree(self._changes_root(name), ignore_errors=True)
+            shutil.rmtree(self._changes_root(name, info.log_gen),
+                          ignore_errors=True)
             for entry in info.indexes.values():
                 if entry["path"].startswith(self.root):
                     shutil.rmtree(entry["path"], ignore_errors=True)

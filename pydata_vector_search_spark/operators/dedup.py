@@ -158,22 +158,6 @@ def _fan_out(df: DataFrame, id_col: str) -> DataFrame:
     return df.repartition(target, F.col(id_col))
 
 
-def _barrier(df: DataFrame) -> DataFrame:
-    """Materialization barrier after an expensive projection.
-
-    Catalyst's projection collapse + generator/filter pushdown happily
-    substitute an alias's defining expression into every consumer — for a
-    signature column consumed by an explode, a filter, and both sides of a
-    self-join that multiplies a minhash/simhash tree 20-50× (measured: 57s
-    instead of 0.3s on sf0.1). A round-robin shuffle pipelines the
-    expression exactly once at the map side and hands consumers
-    materialized attributes; self-joins downstream read the same exchange
-    (ReusedExchange). Payload is (id, signature) — tiny relative to the
-    compute it guards, at any scale."""
-    target = df.sparkSession.sparkContext.defaultParallelism
-    return df.repartition(target)
-
-
 def _minhash_bands(df: DataFrame, text_col: str, id_col: str,
                    n: int, num_hashes: int, bands: int
                    ) -> tuple[DataFrame, DataFrame]:

@@ -18,6 +18,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from pydata_vector_search_spark.catalog import _partition_pred, _without
+
 META_TS = "_commit_ts"
 
 
@@ -45,52 +47,29 @@ def upsert_table(catalog, name: str, new: DataFrame, key: str | None = None) -> 
     reference's NonpartitionedKeyGenerator COW behavior, c8:18-19).
 
     Partitioned: classic partition-scoped COW — only the partitions the
-    new batch touches are read (partition pruning), merged, and replaced
-    (dynamic partition overwrite); untouched partitions' files are never
-    opened or rewritten. At 100 TB this is the difference between a
-    full-table rewrite per batch and work proportional to the batch."""
-    import operator
-    from functools import reduce
+    new batch touches are read (partition pruning), merged, and written;
+    the untouched partitions' files are hardlinked into the new version,
+    never opened or rewritten. At 100 TB this is the difference between
+    a full-table rewrite per batch and work proportional to the batch.
 
+    The batch is logged as commit N (incremental pulls — the Hudi
+    incremental-query semantics of the reference stack) and ONE
+    ``_catalog.json`` replace publishes it with the new snapshot
+    (``Catalog._rewrite``): a crash reattaches to N-1 or to N, whole."""
     info = catalog.info(name)
     key = key or info.key
     if key is None:
         raise ValueError(f"table {name!r} has no record key; register with key=")
-    old = catalog.load(name)
-
+    old = base = catalog.load(name)
+    touched = None
     if info.partition_by:
         touched = [tuple(r) for r in
                    new.select(*info.partition_by).distinct().collect()]
         if not touched:           # empty batch: nothing to rewrite, no commit
             return
-        # Append the batch to the commit log FIRST (while any inputs it
-        # derives from are still readable), enabling incremental pulls
-        # (catalog.read_incremental) — the Hudi incremental-query semantics
-        # of the reference stack. A failed rewrite leaves an orphan log
-        # commit; the snapshot stays consistent either way.
-        catalog.log_commit(name, new)
-        pred = reduce(operator.or_, [
-            reduce(operator.and_,
-                   [F.col(c).eqNullSafe(F.lit(v))
-                    for c, v in zip(info.partition_by, p)])
-            for p in touched])
-        merged = merge_last_write_wins(old.filter(pred), new, key)
-        (merged.localCheckpoint(eager=True)
-               .write.mode("overwrite")
-               .option("partitionOverwriteMode", "dynamic")
-               .partitionBy(*info.partition_by)
-               .parquet(info.path))
-        return
-
-    # Log the batch before the snapshot rewrite (see note above).
-    catalog.log_commit(name, new)
-    merged = merge_last_write_wins(old, new, key)
-    # One write via temp-dir swap (r16): the old checkpoint-then-
-    # overwrite materialized the merged table twice per commit — see
-    # catalog.overwrite_dir_via_swap.
-    catalog.write(name, merged, key=key, mode="overwrite",
-                  partition_by=info.partition_by or None,
-                  reset_history=False, _swap=True)
+        old = old.filter(_partition_pred(info.partition_by, touched))
+    catalog._rewrite(name, merge_last_write_wins(old, new, key),
+                     [(new, "upsert")], base if touched else None, touched)
 
 
 def merge_into(catalog, name: str, source: DataFrame,
@@ -119,19 +98,21 @@ def merge_into(catalog, name: str, source: DataFrame,
 
     CDC: the applied (update+insert) rows log as an upsert commit, the
     deleted rows as a tombstone commit — incremental consumers replay
-    the merge exactly. Returns {"updated", "deleted", "inserted"}.
+    the merge exactly. Both commits and the new snapshot version become
+    current in ONE ``_catalog.json`` replace (``Catalog._rewrite``).
+    Returns {"updated", "deleted", "inserted"}.
 
     Scale: non-partitioned tables COW-rewrite fully (matching the
     reference's NonpartitionedKeyGenerator config). PARTITIONED tables
     get the same economics as ``upsert_table``/``delete_where``: the
     outer join reads only the partitions the SOURCE touches (partition
-    pruning), only those are rewritten (dynamic partition overwrite),
-    and a touched partition left with zero surviving rows has its
-    directory dropped explicitly. Untouched partitions' files are never
-    opened. Semantics note (Hudi partition-scoped/non-global-index, the
-    default): the partition columns are part of record identity — a
-    source row whose key exists only in an UNTOUCHED partition counts as
-    NOT MATCHED there and inserts into its own partition."""
+    pruning), only those are written, and a touched partition left with
+    zero surviving rows is simply absent from the new version. Untouched
+    partitions' files are hardlinked, never opened. Semantics note (Hudi
+    partition-scoped/non-global-index, the default): the partition
+    columns are part of record identity — a source row whose key exists
+    only in an UNTOUCHED partition counts as NOT MATCHED there and
+    inserts into its own partition."""
     info = catalog.info(name)
     key = key or info.key
     if key is None:
@@ -204,75 +185,28 @@ def merge_into(catalog, name: str, source: DataFrame,
     out_cols = [F.when(take_source, F.col(f"__s_{c}"))
                  .otherwise(F.col(f"__t_{c}")).alias(c)
                 for c in cols]
-    # no checkpoint here (r16): ``j`` above is already materialized, so
-    # this projection never reads the table files being replaced — the
-    # old checkpoint was a third full materialization of the snapshot
+    # no checkpoint here: ``j`` above is already materialized, and the
+    # rewrite lands in a new version, so nothing it reads is replaced
+    # under it
     merged = j.filter(take_source | keep_target).select(*out_cols)
 
     counts = j.agg(
         F.sum(upd_hit.cast("long")).alias("u"),
         F.sum(del_hit.cast("long")).alias("d"),
         F.sum(ins_hit.cast("long")).alias("i")).head()
+    changes = []
     if counts.u or counts.i:
-        applied = j.filter(take_source).select(
-            *[F.col(f"__s_{c}").alias(c) for c in cols])
-        catalog.log_commit(name, applied)
+        changes.append((j.filter(take_source).select(
+            *[F.col(f"__s_{c}").alias(c) for c in cols]), "upsert"))
     if counts.d:
-        doomed = j.filter(del_hit).select(
-            *[F.col(f"__t_{c}").alias(c) for c in cols])
-        catalog.log_commit(name, doomed, op="delete")
-
-    if info.partition_by:
-        import shutil
-        # merged holds every surviving row of the TOUCHED partitions (plus
-        # inserts, whose partition values are touched by construction);
-        # dynamic overwrite replaces exactly those, so untouched
-        # partitions' files are never opened or rewritten. A touched
-        # partition with no survivors contributes nothing to the dynamic
-        # overwrite — resolve and drop its directory explicitly.
-        survivors = {tuple(r) for r in
-                     merged.select(*info.partition_by).distinct().collect()}
-        emptied = [p for p in touched if p not in survivors]
-        empty_dirs = _emptied_partition_dirs(old, info.partition_by, emptied)
-        (merged.write.mode("overwrite")
-               .option("partitionOverwriteMode", "dynamic")
-               .partitionBy(*info.partition_by)
-               .parquet(info.path))
-        for d in empty_dirs:
-            shutil.rmtree(d, ignore_errors=True)
-    else:
-        catalog.write(name, merged, key=key, mode="overwrite",
-                      reset_history=False)
+        changes.append((j.filter(del_hit).select(
+            *[F.col(f"__t_{c}").alias(c) for c in cols]), "delete"))
+    # merged holds every surviving row of the TOUCHED partitions (plus
+    # inserts, whose partition values are touched by construction)
+    catalog._rewrite(name, merged, changes, old if touched else None,
+                     touched or None)
     return {"updated": int(counts.u or 0), "deleted": int(counts.d or 0),
             "inserted": int(counts.i or 0)}
-
-
-def _partition_pred(partition_by: list[str], parts: list[tuple]):
-    import operator
-    from functools import reduce
-
-    return reduce(operator.or_, [
-        reduce(operator.and_,
-               [F.col(c).eqNullSafe(F.lit(v))
-                for c, v in zip(partition_by, p)])
-        for p in parts])
-
-
-def _emptied_partition_dirs(old: DataFrame, partition_by: list[str],
-                            emptied: list[tuple]) -> set[str]:
-    """Resolve the on-disk directories of partitions about to end up with
-    ZERO surviving rows, from the actual file paths (``input_file_name``
-    — ground truth, no hive-escaping guesswork). Must be called BEFORE
-    the rewrite; dynamic partition overwrite never touches a partition
-    that contributes no rows, so these dirs must be dropped explicitly."""
-    import os
-    from urllib.parse import unquote, urlparse
-
-    if not emptied:
-        return set()
-    files = [r[0] for r in old.filter(_partition_pred(partition_by, emptied))
-             .select(F.input_file_name()).distinct().collect()]
-    return {os.path.dirname(unquote(urlparse(f).path)) for f in files}
 
 
 def delete_where(catalog, name: str, predicate) -> int:
@@ -281,20 +215,18 @@ def delete_where(catalog, name: str, predicate) -> int:
     rows are logged to the commit log as tombstones (``_deleted=true``)
     so incremental consumers can retract them downstream.
 
-    Partitioned tables rewrite only the partitions containing matches
-    (dynamic partition overwrite) — work proportional to affected data,
-    the same economics as the partition-scoped upsert. A touched partition
-    left with ZERO surviving rows contributes nothing to the dynamic
-    overwrite, so its directory is dropped explicitly (located via the
-    doomed rows' ``input_file_name`` — ground truth, no path-escaping
-    guesswork). Returns the number of rows deleted; a no-match delete
-    writes nothing and logs nothing.
+    Partitioned tables rewrite only the partitions containing matches —
+    work proportional to affected data, the same economics as the
+    partition-scoped upsert; the other partitions are hardlinked into the
+    new version, and a touched partition left with ZERO surviving rows is
+    simply absent from it. The tombstones and the new version become
+    current in ONE ``_catalog.json`` replace (``Catalog._rewrite``).
+    Returns the number of rows deleted; a no-match delete writes nothing
+    and logs nothing.
 
     SQL DELETE semantics: only rows where the predicate is TRUE are
-    deleted; rows where it evaluates to NULL are retained (``kept``
-    filters on ``NOT coalesce(pred, false)``, not ``NOT pred``)."""
-    import shutil
-
+    deleted; rows where it evaluates to NULL are retained (``keep_cond``
+    is ``NOT coalesce(pred, false)``, not ``NOT pred``)."""
     info = catalog.info(name)
     old = catalog.load(name)
     cond = F.expr(predicate) if isinstance(predicate, str) else predicate
@@ -302,31 +234,8 @@ def delete_where(catalog, name: str, predicate) -> int:
     n = doomed.count()
     if n == 0:
         return 0
-    catalog.log_commit(name, doomed, op="delete")
     # NULL-predicate rows are neither doomed nor dropped: keep = NOT TRUE.
     keep_cond = ~F.coalesce(cond, F.lit(False))
-
-    if info.partition_by:
-        touched = [tuple(r) for r in
-                   doomed.select(*info.partition_by).distinct().collect()]
-        pred = _partition_pred(info.partition_by, touched)
-        kept = (old.filter(pred).filter(keep_cond)
-                   .localCheckpoint(eager=True))
-        survivors = {tuple(r) for r in
-                     kept.select(*info.partition_by).distinct().collect()}
-        emptied = [p for p in touched if p not in survivors]
-        empty_dirs = _emptied_partition_dirs(old, info.partition_by, emptied)
-        (kept.write.mode("overwrite")
-             .option("partitionOverwriteMode", "dynamic")
-             .partitionBy(*info.partition_by)
-             .parquet(info.path))
-        for d in empty_dirs:
-            shutil.rmtree(d, ignore_errors=True)
-        return n
-
-    # swap write instead of checkpoint-then-overwrite (r16; see
-    # catalog.overwrite_dir_via_swap)
-    kept = old.filter(keep_cond)
-    catalog.write(name, kept, key=info.key, mode="overwrite",
-                  reset_history=False, _swap=True)
+    df, base, touched = _without(old, doomed, keep_cond, info.partition_by)
+    catalog._rewrite(name, df, [(doomed, "delete")], base, touched)
     return n

@@ -457,6 +457,44 @@ def test_purge_keys_erases_history_and_index(spark, cat, tmp_path):
         cat.purge_keys("p", list(range(10)), max_keys=5)
 
 
+def test_purge_every_key_of_a_centroid_drops_its_index_partition(
+        spark, cat, tmp_path):
+    """Purging ALL keys of one centroid leaves that ``__cid`` partition
+    with no kept rows: its directory must go (a dynamic overwrite never
+    touches a partition it writes no rows to), so no purged key remains
+    in the index files and a full probe equals exact KNN over the
+    survivors."""
+    import math
+
+    from pydata_vector_search_spark.operators import ann, knn
+
+    # three well-separated directions, ten jittered keys each
+    rows = [(i, [math.cos(2 * math.pi * (i % 3) / 3 + 0.01 * i),
+                 math.sin(2 * math.pi * (i % 3) / 3 + 0.01 * i)])
+            for i in range(30)]
+    cat.write("pc", spark.createDataFrame(rows, "k int, emb array<double>"),
+              key="k")
+    idx = ann.ivf_build(cat.load("pc"), "emb", str(tmp_path / "pcidx"),
+                        num_centroids=3, seed=1)
+    cat.register_index("pc", "emb", idx.path)
+    data = spark.read.parquet(idx.data_path)
+    cid = data.filter("k = 0").head()["__cid"]
+    doomed = [r.k for r in data.filter(F.col("__cid") == cid).collect()]
+    assert 0 < len(doomed) < 30
+
+    out = cat.purge_keys("pc", doomed)
+    assert out["purged"] == len(doomed) and out["indexes_patched"] == ["emb"]
+    assert spark.read.parquet(idx.data_path) \
+        .filter(F.col("k").isin(doomed)).count() == 0
+    q = rows[0][1]
+    exact = [r.k for r in knn.vector_search(
+        cat.load("pc"), "emb", q, k=10, tiebreaker="k").collect()]
+    probed = [r.k for r in ann.ivf_search(
+        spark, ann.IVFIndex.load(spark, idx.path), q, k=10, nprobe=3,
+        tiebreaker="k").collect()]
+    assert probed == exact and not set(exact) & set(doomed)
+
+
 def test_purge_keys_keeps_null_key_rows(spark, cat):
     """ADVICE r06 (medium): under three-valued logic ~isin(NULL) is NULL
     — NULL-key rows must survive every purge rewrite (snapshot, commit
@@ -485,19 +523,22 @@ def test_purge_partitioned_rewrites_only_touched(spark, cat):
     df = spark.createDataFrame(
         [(1, "a"), (2, "a"), (3, "b"), (4, "b")], "k int, p string")
     cat.write("pp", df, key="k", partition_by=["p"])
-    path = cat.info("pp").path
-    b_files = {f: os.path.getmtime(f)
-               for f in glob.glob(os.path.join(path, "p=b", "*.parquet"))}
+
+    def files_of(part):
+        # the current version's directory: every purge writes a new one
+        d = os.path.join(cat.info("pp").path, part)
+        return {os.path.basename(f): (os.stat(f).st_ino, os.path.getmtime(f))
+                for f in glob.glob(os.path.join(d, "*.parquet"))}
+
+    b_files = files_of("p=b")
     assert b_files
 
     out = cat.purge_keys("pp", [1])
     assert out["purged"] == 1
     assert cat.load("pp").count() == 3
-    after = {f: os.path.getmtime(f)
-             for f in glob.glob(os.path.join(path, "p=b", "*.parquet"))}
-    assert after == b_files          # p=b never rewritten
+    assert files_of("p=b") == b_files   # p=b never rewritten: same inodes
 
     cat.purge_keys("pp", [2])        # empties partition a entirely
-    assert not os.path.isdir(os.path.join(path, "p=a"))
+    assert not os.path.isdir(os.path.join(cat.info("pp").path, "p=a"))
     assert cat.load("pp").count() == 2
     assert {r.k for r in cat.load("pp").collect()} == {3, 4}

@@ -45,11 +45,12 @@ def test_partition_scoped_upsert_leaves_other_partitions_untouched(spark, tmp_pa
     ev = read_table(spark, "/root/testdata/sf0.001", "events") \
         .select("event_id", "event_type", "value")
     cat.write("ev_part", ev, key="event_id", partition_by=["event_type"])
-    table_path = cat.info("ev_part").path
 
     def files_of(part):
-        d = os.path.join(table_path, f"event_type={part}")
-        return {f: os.path.getmtime(os.path.join(d, f))
+        # the current version's directory: every commit writes a new one
+        d = os.path.join(cat.info("ev_part").path, f"event_type={part}")
+        return {f: (os.stat(os.path.join(d, f)).st_ino,
+                    os.path.getmtime(os.path.join(d, f)))
                 for f in os.listdir(d) if f.endswith(".parquet")}
 
     before_error = files_of("error")
@@ -61,7 +62,7 @@ def test_partition_scoped_upsert_leaves_other_partitions_untouched(spark, tmp_pa
     after = cat.load("ev_part")
     assert after.count() == n_before                      # pure update
     assert after.filter(F.col("value") == -1.0).count() == 5
-    assert files_of("error") == before_error              # partition untouched
+    assert files_of("error") == before_error   # untouched: same inode+mtime
 
 
 def test_partition_scoped_upsert_inserts_new_keys(spark, tmp_path):
@@ -166,13 +167,14 @@ def test_merge_into_partition_scoped(spark, tmp_path):
     ev = read_table(spark, "/root/testdata/sf0.001", "events") \
         .select("event_id", "event_type", "value")
     cat.write("ev", ev, key="event_id", partition_by=["event_type"])
-    table_path = cat.info("ev").path
 
     def files_of(part):
-        d = os.path.join(table_path, f"event_type={part}")
+        # the current version's directory: every commit writes a new one
+        d = os.path.join(cat.info("ev").path, f"event_type={part}")
         if not os.path.isdir(d):
             return None
-        return {f: os.path.getmtime(os.path.join(d, f))
+        return {f: (os.stat(os.path.join(d, f)).st_ino,
+                    os.path.getmtime(os.path.join(d, f)))
                 for f in os.listdir(d) if f.endswith(".parquet")}
 
     before_error = files_of("error")
@@ -199,7 +201,7 @@ def test_merge_into_partition_scoped(spark, tmp_path):
     assert files_of("click") is None                 # emptied dir dropped
     assert got.filter("event_type = 'brandnew'").count() == 2
     assert got.filter("value = -5.0").count() == 3
-    assert files_of("error") == before_error         # untouched partition
+    assert files_of("error") == before_error   # untouched: same inode+mtime
 
 
 def test_merge_into_partitioned_key_is_partition_scoped(spark, tmp_path):
@@ -291,45 +293,3 @@ def test_merge_into_rejects_dup_and_null_source_keys(spark, tmp_path):
             [(None, "x")], "k int, v string"))
     # guards fire BEFORE any commit is logged
     assert cat.current_commit("t") == 1
-
-
-def test_swap_residue_sweep_on_attach(spark, tmp_path):
-    """r17 hardening: a crash mid-``overwrite_dir_via_swap`` strands
-    dot-prefixed ``.__swap_tmp`` / ``.__swap_old`` siblings. Catalog
-    reattach deletes tmp residue, RESTORES an old sibling whose target
-    vanished (crash between the two renames), and leaves live data
-    untouched. The dot prefix keeps Spark's hidden-path filter blind to
-    residue meanwhile."""
-    import os
-    import shutil
-
-    root = str(tmp_path / "sweep")
-    cat = Catalog(spark, root)
-    df = spark.createDataFrame([(1, "a"), (2, "b")], "k int, v string")
-    cat.write("t", df, key="k")
-    upsert_table(cat, "t", spark.createDataFrame([(2, "B")],
-                                                 "k int, v string"))
-
-    # simulate a crash AFTER the write of tmp but before the swap, and
-    # a finished swap whose old-dir cleanup never ran
-    tpath = os.path.join(root, "t")
-    os.makedirs(os.path.join(root, ".t.__swap_tmp", "sub"))
-    shutil.copytree(tpath, os.path.join(root, ".t.__swap_old"))
-    # and a commit-dir level residue inside the changes root
-    croot = cat._changes_root("t")
-    os.makedirs(os.path.join(croot, ".commit=2.__swap_tmp"))
-
-    cat2 = Catalog(spark, root)                      # reattach sweeps
-    assert not os.path.exists(os.path.join(root, ".t.__swap_tmp"))
-    assert not os.path.exists(os.path.join(root, ".t.__swap_old"))
-    assert not os.path.exists(os.path.join(croot, ".commit=2.__swap_tmp"))
-    got = {r.k: r.v for r in cat2.load("t").collect()}
-    assert got == {1: "a", 2: "B"}
-    # incremental/asof readers see clean commit partitions only
-    assert cat2.read_asof("t", 1).count() == 2
-
-    # crash BETWEEN the two renames: target gone, old complete → restore
-    os.rename(tpath, os.path.join(root, ".t.__swap_old"))
-    cat3 = Catalog(spark, root)
-    assert os.path.isdir(tpath)
-    assert {r.k: r.v for r in cat3.load("t").collect()} == {1: "a", 2: "B"}

@@ -88,3 +88,41 @@ def test_ivf_patch_job_budget(spark, emb, tmp_path):
                 .withColumn("_deleted", F.col("vec_id") < 5))
     n = _jobs(spark, lambda: ann.ivf_patch(spark, idx, batch, "vec_id"))
     assert n <= 9
+
+
+@pytest.fixture
+def part_table(spark, tmp_path):
+    """A keyed table partitioned three ways, one file per partition."""
+    from pydata_vector_search_spark.catalog import Catalog
+
+    cat = Catalog(spark, str(tmp_path / "cat"))
+    cat.write("t", spark.createDataFrame(
+        [(i, "abc"[i % 3], float(i)) for i in range(30)],
+        "k int, p string, x double").coalesce(1), key="k",
+        partition_by=["p"])
+    return cat
+
+
+def test_partitioned_upsert_job_budget(spark, part_table):
+    """An upper bound (7 at the rename-swap layout too): the footer read
+    of the load, the touched-partition collect, the log write, the
+    touched-file lookup and the merged write. The rewrite reads the
+    current version while writing a new one, so no checkpoint job."""
+    from pydata_vector_search_spark.operators.upsert import upsert_table
+
+    batch = spark.createDataFrame([(1, "b", -1.0), (99, "b", 9.0)],
+                                  "k int, p string, x double")
+    n = _jobs(spark, lambda: upsert_table(part_table, "t", batch))
+    assert n <= 7
+
+
+def test_partitioned_delete_job_budget(spark, part_table):
+    """An upper bound (13 at the in-place layout, which checkpointed the
+    kept rows and collected the survivors): the footer read, the doomed-
+    row checkpoint and count, the log write, the touched-partition
+    collect, the touched-file lookup and the kept-row write."""
+    from pydata_vector_search_spark.operators.upsert import delete_where
+
+    n = _jobs(spark, lambda: delete_where(part_table, "t",
+                                          "p = 'a' OR k = 4"))
+    assert n <= 9

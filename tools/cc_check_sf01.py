@@ -32,9 +32,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 CC_QUERIES = ("dedup_clusters", "dedup_clusters_dist",
               "dedup_keep_best", "semantic_dedup",
               # r11-staged: activates automatically once declared (its
-              # draft oracle embeds the same reach/comp idiom and an
-              # `edges(u, v)` CTE — verified against
-              # tools/kmeans_oracle_draft.build_semdedup_kmeans_oracle_sql)
+              # oracle embeds the same reach/comp idiom and an
+              # `edges(u, v)` CTE)
               "semdedup_kmeans")
 
 # the shared closure idiom every CC oracle embeds, verbatim shape:

@@ -96,11 +96,14 @@ def _query_vec(spark: SparkSession, sf_dir: str, vec_id: int = 0) -> list[float]
     return _QVEC_CACHE[k]
 
 
+def _cosine_sim(vec_col, qvec) -> F.Column:
+    """Cosine similarity to a constant query: 1 - the kernel's distance."""
+    from pydata_vector_search_spark.functions.vector import distance_expr_lit
+    return F.lit(1.0) - distance_expr_lit("cosine", vec_col, qvec)
+
+
 def _score(vec_col, qvec) -> F.Column:
-    # unrolled codegen-path cosine (~20× the HOF scan; functions/vector.py)
-    from pydata_vector_search_spark.functions.vector import cosine_similarity_lit
-    return F.round(cosine_similarity_lit(vec_col,
-                                         [float(v) for v in qvec]), 2)
+    return F.round(_cosine_sim(vec_col, qvec), 2)
 
 
 _ORACLE_Q = "(SELECT embedding::DOUBLE[] FROM embeddings WHERE vec_id = 0)"
@@ -144,7 +147,7 @@ def q_pq_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_vector_topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     """V4 generalization SURVEY §2.9 names outright ("top matches per
     company"): top-3 most-similar vectors PER LABEL — one scan with the
-    codegen cosine, then rank-limit per group. Spark 3.5+ plans the
+    Arrow cosine kernel, then rank-limit per group. Spark 3.5+ plans the
     row_number ≤ k filter as WindowGroupLimit: each task keeps a k-row
     heap per group BEFORE the single group-key shuffle, so shuffled bytes
     are groups × k, not the corpus."""
@@ -456,10 +459,8 @@ def q_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     array aggregate): per-label mean embedding via posexplode → one
     (label, pos) hash aggregate (map-side combined: shuffle = labels ×
     dim, corpus-size independent) → array re-assembly, then each
-    centroid scored against the query vector with the codegen'd cosine.
+    centroid scored against the query vector with the Arrow cosine kernel.
     The oracle replays with unnest-WITH-ORDINALITY + list(ORDER BY)."""
-    from pydata_vector_search_spark.functions.vector import \
-        cosine_similarity_lit
     from pydata_vector_search_spark.operators.vector_agg import mean_vector
     emb = _t(spark, sf_dir, "embeddings")
     qv = _query_vec(spark, sf_dir)
@@ -467,7 +468,7 @@ def q_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = emb.groupBy("label").agg(F.count(F.lit(1)).cast("long").alias("n"))
     return (cent.join(n, "label")
             .select("label", "n",
-                    F.round(cosine_similarity_lit("centroid", qv), 6)
+                    F.round(_cosine_sim("centroid", qv), 6)
                      .alias("centroid_sim"))
             .orderBy("label"))
 
@@ -1475,7 +1476,7 @@ def q_stream_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     latest row per key by commit, tombstones retracted. The replayed
     aggregate hash-matches a pure-SQL derivation of the final state, so
     the CDC feed provably carries every upsert AND every delete (the
-    r03 tombstone bug class, now under the oracle, not just pytest).
+    tombstone bug class, under the oracle, not just pytest).
     Commit order, not arrival order, decides — each key appears at most
     once per commit, so the replay is micro-batch-split independent."""
     import tempfile
@@ -1670,7 +1671,7 @@ def q_paragraph_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _t(spark, sf_dir, "documents")
     # token array materialized in its own projection before the line
-    # rebuild (r08, same interpreted-HOF re-evaluation class as the
+    # rebuild (same interpreted-HOF re-evaluation class as the
     # clean_pipeline fix: the inline spelling re-runs normalize+split
     # once per 10-token line — measured 0.78 s vs 0.34 s warm at sf0.1
     # for the rebuild expression alone)
@@ -1826,8 +1827,7 @@ def q_clean_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     paragraph-level dedup over the SURVIVORS (first occurrence computed
     on the gated corpus, matching real pipeline order), then (3) a
     per-language rollup of documents, units kept, surviving tokens, and
-    an md5-sum over every rebuilt text. Declared r06-late: sits just
-    outside the full driver window (rotates in next round); locally
+    an md5-sum over every rebuilt text. Locally
     oracle-verified at sf0.001/0.01/0.1."""
     from pydata_vector_search_spark.operators.span_dedup import paragraph_dedup
 
@@ -1839,7 +1839,7 @@ def q_clean_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
                  .filter((F.col("__q") >= 0.5) & (F.col("__pl") != "und")
                          & (F.col("__nt") >= 20)))
     # Token array MATERIALIZED into its own projection before the line
-    # rebuild (r08): HOF lambdas are interpreted with no cross-lambda
+    # rebuild: HOF lambdas are interpreted with no cross-lambda
     # CSE, so the inline spelling re-runs the normalize+split regex
     # once per 10-token line — O(L²/k) regex work per doc (the same
     # bug class fingerprint.py documents; measured 0.78 s vs 0.34 s
@@ -1853,7 +1853,7 @@ def q_clean_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     lines = F.transform(
         F.sequence(F.lit(0), nlines - 1),
         lambda i: F.array_join(F.slice(tk, i * k + 1, k), " "))
-    # Materialization barrier (r07, tightened r08): paragraph_dedup
+    # Materialization barrier: paragraph_dedup
     # references its input three times and the final rollup joins the
     # gate output again — without a barrier Catalyst re-evaluates the
     # multi-regex gate chain once per reference (4 corpus passes of
@@ -1861,8 +1861,8 @@ def q_clean_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # localCheckpoint stores the GATED SURVIVORS (doc_id, lang, rebuilt
     # text — the budget-bounded side) and BOTH consumers (the dedup
     # input and the language rollup join) derive from it, so the gate
-    # chain runs exactly once (r07 checkpointed d and the lang
-    # projection separately, which still evaluated the gate twice). At
+    # chain runs exactly once (checkpointing d and the lang projection
+    # separately still evaluated the gate twice). At
     # 100 TB this is one survivor-sized block-manager write vs four
     # full regex passes.
     gated = gated.select("doc_id", "lang",
@@ -1888,13 +1888,12 @@ def q_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     ANN-mined negatives step of contrastive pipelines, e.g. DPR /
     Contriever): for each query vector, its top-3 most-similar vectors
     with a DIFFERENT label. Composition of the proven batch-KNN
-    machinery (knn.knn_join, Arrow numpy scoring, round-6 discipline —
+    machinery (knn.knn_join, Arrow numpy scoring —
     the same pair population the green knn_join oracle pins): one
     knn_join per distinct query label against the label-excluded
     corpus; the label loop is bounded by the tiny query batch (≤5),
     and each join broadcasts its query block — the corpus never
-    shuffles. Declared r06-late, outside the full driver window
-    (rotates into r07); locally oracle-green at sf0.001/0.01/0.1."""
+    shuffles. Locally oracle-green at sf0.001/0.01/0.1."""
     from functools import reduce
 
     emb = _t(spark, sf_dir, "embeddings")
@@ -1916,7 +1915,7 @@ def q_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_dataloader_epoch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ASSEMBLE A TRAINING EPOCH end-to-end — the dataloader-side
     composition a pretraining run executes after the corpus is clean,
-    chained as one lineage (r06 verdict #6): (1) temperature-weighted
+    chained as one lineage: (1) temperature-weighted
     corpus mixing (n^0.5 source flattening, md5 hash-rule membership),
     (2) token-budget selection of the best 8k tokens by the
     percent-distinct quality bucket (bucket histogram + boundary-only
@@ -1974,7 +1973,7 @@ def q_dataloader_epoch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_temperature_mix_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TOKEN-BUDGET temperature mixing (r07): the mixing mass is token
+    """TOKEN-BUDGET temperature mixing: the mixing mass is token
     count, not document count — what pretraining recipes actually
     specify (the Pile/ROOTS shares are token shares). Group mass
     n_g = Σ token_count; rate_g = min(1, n_g^0.5/Σn^0.5 · 0.4·N_tok /
@@ -1999,7 +1998,7 @@ def q_temperature_mix_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_stream_index_patch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """STREAM → INDEX composition (r06 verdict #7): the index-staleness
+    """STREAM → INDEX composition: the index-staleness
     contract under a STREAMING writer. Ingest embeddings, pin a
     table-scoped IVF index to the commit (the reference's table-scoped
     index, demo.ipynb c14:1) — then a structured STREAM of mutations
@@ -2171,14 +2170,12 @@ _CHUNK_QUERY_TEXT = "learning data model systems"
 def q_chunk_embed_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end RAG indexing pipeline under the hash gate: content-
     defined chunking → executor-side mapInPandas embedding (Md5Encoder)
-    → codegen cosine top-10 chunks for a fixed query text. Composes three
+    → Arrow-kernel cosine top-10 chunks for a fixed query text. Composes three
     independently-oracled stages (chunk_summary, embed_hash, vector_knn)
     into one plan; the oracle replays every arithmetic step in SQL and the
     query embedding is computed driver-side with the same encoder — the
     reference's encode-then-search flow (demo.ipynb c7→c11) applied to
     chunks instead of whole documents."""
-    from pydata_vector_search_spark.functions.vector import \
-        cosine_similarity_lit
     from pydata_vector_search_spark.operators.chunking import chunk_texts
     from pydata_vector_search_spark.operators.embedding import Md5Encoder
 
@@ -2189,7 +2186,7 @@ def q_chunk_embed_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     qv = [float(v) for v in enc.encode_batch([_CHUNK_QUERY_TEXT])[0]]
     return (emb.withColumn(
                 "score",
-                F.round(cosine_similarity_lit("embedding", qv), 4))
+                F.round(_cosine_sim("embedding", qv), 4))
             .orderBy(F.col("score").desc(), "doc_id", "chunk_idx")
             .limit(10)
             .select("doc_id", "chunk_idx", "n_tokens", "score"))
@@ -2905,7 +2902,7 @@ def q_time_travel_read(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# round-6 additions: distributed CC, IVF×PQ, MMR oracle, MIN/MAX IVM
+# distributed CC, IVF×PQ, MMR oracle, MIN/MAX IVM
 # --------------------------------------------------------------------------
 
 def q_dedup_clusters_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2914,7 +2911,7 @@ def q_dedup_clusters_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(log n) pointer-jumping loop (operators/graph.py, Kiveris SoCC'14
     shape) computes the labels — the code path every 100-TB near-dup
     graph takes. The union-find fast path had absorbed all oracle-scale
-    CC runs (r05 verdict #1); here the distributed iterations themselves
+    CC runs; here the distributed iterations themselves
     carry the hash: the loop executes ≥1 full join+jump round by
     construction (termination requires a no-change round) and the
     local/distributed equality is separately test-pinned."""
@@ -2980,7 +2977,7 @@ def q_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_incremental_agg_minmax(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVM with NON-delta-maintainable measures (r05 verdict #8): the
+    """IVM with NON-delta-maintainable measures: the
     rollup carries MIN/MAX next to SUM/COUNT, so ``refresh_agg`` runs
     the group-scoped recompute path — changed keys → affected groups →
     one semi-join-scoped groupBy merged with untouched rollup rows —
@@ -3065,7 +3062,7 @@ def q_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_jaccard_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The AUTO-dispatched exact Jaccard join (r08, VERDICT r07 #2):
+    """The AUTO-dispatched exact Jaccard join:
     ``jaccard_similarity_join_auto`` — the Engine facade's DEFAULT dedup
     path (engine.py neardup_pairs method='jaccard') — measures the
     corpus's duplicate-heaviness ratio R = ΣC(df,2)/Σdf in one probe
@@ -3089,7 +3086,7 @@ def q_jaccard_auto_heavy(spark: SparkSession, sf_dir: str) -> DataFrame:
     measured R to ~1.6 (sf0.01) / ~10.2 (sf0.1); ``dup_ratio_threshold=1``
     sits below both so the dispatcher routes PREFIX at every SF — the
     probe scan, the threshold compare, the estimate threading into the
-    broadcast gate (r08: the probe's ΣC(df,2) is reused as the gate
+    broadcast gate (the probe's ΣC(df,2) is reused as the gate
     estimate, one corpus scan for decision + gate) and the PPJoin
     verify are all on the hashed path. Oracle: all-pairs exact Jaccard
     over the same doubled corpus."""
@@ -3105,8 +3102,7 @@ def q_jaccard_auto_heavy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_pack_tokenized(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sequence packing on PLUGGABLE-TOKENIZER counts (r08, VERDICT r07
-    #5): token counts come from the ``operators/tokenize.py`` hook — an
+    """Sequence packing on PLUGGABLE-TOKENIZER counts: token counts come from the ``operators/tokenize.py`` hook — an
     Arrow-batched mapInPandas stage whose default ``RegexBpeTokenizer``
     (the GPT-2-style pre-tokenizer regex) is bit-identical to the JVM
     ``token_count_bpe`` Column, so the SAME pipeline runs on a real BPE
@@ -3133,7 +3129,7 @@ def q_pack_tokenized(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_token_budget_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token-budget selection through the DISTRIBUTED boundary prefix
-    sum (r08, VERDICT r07 #3): ``max_boundary_task_rows=0`` forces the
+    sum: ``max_boundary_task_rows=0`` forces the
     scale path — the boundary bucket's running sum decomposes into 16
     deterministic id-range sub-buckets + driver prefix offsets + a
     PARTITIONED window (no unpartitioned WindowExec in the plan; each
@@ -3166,7 +3162,7 @@ def q_token_budget_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_winnow_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """WINNOWING fingerprint near-dup (r08; Schleimer/Kleinberg/Aiken
+    """WINNOWING fingerprint near-dup (Schleimer/Kleinberg/Aiken
     SIGMOD'03 — the MOSS scheme): min md5-hash per sliding window of 6
     consecutive character 12-gram hashes, distinct per doc; pairs
     sharing >= 20 fingerprints, with the >50-doc hot-fingerprint cap
@@ -3188,13 +3184,13 @@ def q_winnow_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_nb_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SQL-EXACT Naive Bayes corpus classification (r09; staged r08):
+    """SQL-EXACT Naive Bayes corpus classification:
     the quality/domain-gate role fastText linear classifiers play in
     CCNet/FineWeb-style curation (train on a labeled slice, score the
     whole corpus, route by predicted class — McCallum & Nigam,
     AAAI-98). Trains on ``documents.lang`` with ``max_vocab=4096``
-    md5 hash-buckets — the BOUNDED-model path (the r08 verdict's
-    scale-safety ask: the broadcast dense table is provably
+    md5 hash-buckets — the BOUNDED-model path (for scale safety: the
+    broadcast dense table is provably
     <= max_vocab·|labels| rows at ANY corpus size; the facade
     ``Engine.classify`` defaults the cap to 2^18 for the same reason,
     and ``nb_score`` gates its broadcast on the trained |V| besides).
@@ -3209,7 +3205,7 @@ def q_nb_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     try:
         # Materialize the |labels|-row rollup eagerly so the cached
         # vocabulary-sized training-count table can be released HERE
-        # instead of leaking for the session lifetime (r12 ADVICE) —
+        # instead of leaking for the session lifetime —
         # the corpus-sized work is identical; only the ≤|labels| final
         # rows cross the driver boundary.
         rows = rolled.collect()
@@ -3237,12 +3233,11 @@ def _nb_classify_lazy(spark: SparkSession, sf_dir: str):
 
 
 def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """INTEGER-EXACT PageRank (r09; staged r08) over the
+    """INTEGER-EXACT PageRank over the
     customer↔supplier interaction graph: distinct (customer, supplier)
     purchase pairs from orders ⋈ lineitem, both directions, the two
     node families kept disjoint by PARITY — customers as 2·custkey,
-    suppliers as 2·suppkey+1 (r09 ADVICE: the previous fixed 10M
-    offset collides with o_custkey at sf ≳ 67 and silently merges
+    suppliers as 2·suppkey+1 (a fixed 10M offset would collide with o_custkey at sf ≳ 67 and silently merges
     graph nodes; the parity encoding is collision-free at every scale
     and costs no extra scan). Rank units are unchanged by the
     relabeling — PageRank depends only on graph structure, so the
@@ -3278,8 +3273,8 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_winnow_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Winnowing fingerprints composed into DEDUP CLUSTERS (r09): the
-    MOSS-style near-dup pairs (Schleimer SIGMOD'03; the r08-green
+    """Winnowing fingerprints composed into DEDUP CLUSTERS: the
+    MOSS-style near-dup pairs (Schleimer SIGMOD'03; the
     ``winnow_neardup`` lineage verbatim — k=12, w=6, >=20 shared
     fingerprints, hot-fp cap 50) collapsed to connected components and
     rolled up per cluster — the keep-one-representative decision table
@@ -3303,8 +3298,7 @@ def q_winnow_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """INTEGER-EXACT k-means assignment (r10; staged + oracle-validated
-    r09): fixed-iteration Lloyd over the embeddings table — the
+    """INTEGER-EXACT k-means assignment: fixed-iteration Lloyd over the embeddings table — the
     clustering primitive SemDeDup, cluster-balanced sampling, and
     IVF-style partitioning all build on
     (operators/clustering.py:149,208). Coordinates quantized as
@@ -3330,8 +3324,7 @@ def q_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_kmeans_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cluster-balanced sampling (r10; staged + oracle-validated r09):
-    the k-means assignment composed with the whale-safe salted
+    """Cluster-balanced sampling: the k-means assignment composed with the whale-safe salted
     tournament top-n (operators/sampling.py:51,87) — keep
     ``per_cluster`` rows per semantic cluster ranked by (md5(id), id),
     a seedless partition-independent uniform draw. The tournament
@@ -3350,8 +3343,7 @@ def q_kmeans_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-node triangle counts (r10; staged + oracle-validated r09)
-    over the part co-purchase graph — parts linked when they share an
+    """Per-node triangle counts over the part co-purchase graph — parts linked when they share an
     order (bounded ~C(7,2) pairs per order at any TPC-H scale), the
     local-clustering signal that complements components (membership)
     and PageRank (centrality) on the same pair inputs. Exact integers;
@@ -3364,7 +3356,7 @@ def q_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     all codegen, nothing driver-side."""
     from pydata_vector_search_spark.operators.graph import triangle_count
     li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    # pair generation WITHOUT the self-join (r12 perf): one groupBy
+    # pair generation WITHOUT the self-join: one groupBy
     # shuffle collects each order's distinct parts (bounded ~7 at any
     # TPC-H SF — no whale arrays), pairs generate IN-TASK from the
     # sorted array (posexplode + slice keeps it codegen, u < v by
@@ -3373,7 +3365,7 @@ def q_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     # measured 2.38 -> 1.40 s warm at sf0.1, identical 1,196,000
     # edges. Canonical by construction, so triangle_count skips its
     # re-canonicalizing |E| shuffle (assume_canonical).
-    # r13: repartition on the group key BEFORE the aggregate — the
+    # Repartition on the group key BEFORE the aggregate — the
     # single-row-group parquet scan otherwise runs the 600k-row partial
     # collect_set on one core, and since the hash layout satisfies the
     # groupBy's clustering no second exchange appears (measured edge
@@ -3381,7 +3373,7 @@ def q_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 1,196,000 edges). At cluster scale the scan arrives pre-split and
     # the repartition is the same one exchange the groupBy would add —
     # targeted at max(cores, shuffle.partitions) so it never carries
-    # less parallelism than the groupBy exchange it replaces (r14).
+    # less parallelism than the groupBy exchange it replaces.
     grp = (li.repartition(traded_shuffle_partitions(spark),
                           "l_orderkey")
              .groupBy("l_orderkey")
@@ -3400,11 +3392,10 @@ def q_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BPE vocabulary induction (r10; staged + oracle-validated r09):
-    learn 12 merges from the documents corpus (Sennrich ACL'16) —
+    """BPE vocabulary induction: learn 12 merges from the documents corpus (Sennrich ACL'16) —
     tokenizer training as a pipeline stage. The corpus-sized work is
     ONE map-side-combinable word-frequency aggregate; the driver merge
-    loop is incremental (inverted pair index + lazy heap, r10 — each
+    loop is incremental (inverted pair index + lazy heap — each
     merge touches only the words containing the winning pair) and
     bounded by min_count/max_word_types however large the corpus
     grows. Declared envelope: this query's 12 merges over <= 1M word
@@ -3421,8 +3412,7 @@ def q_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_semdedup_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SemDeDup with its ACTUAL k-means partitioner (r11; staged +
-    oracle-validated r10): the paper-faithful pipeline (Abbas et al.
+    """SemDeDup with its ACTUAL k-means partitioner: the paper-faithful pipeline (Abbas et al.
     2023, arXiv:2303.09540) the clustering family was built for —
     integer-exact k-means clusters, within-cluster rounded-cosine
     pairs, connected-components transitive hull, min-id survivor —
@@ -3447,8 +3437,7 @@ def q_semdedup_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_domain_token_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-domain token cap (r11; staged + oracle-validated r10),
-    declared on the DISTRIBUTED branch — the whale-safe bucket-routed
+    """Per-domain token cap, declared on the DISTRIBUTED branch — the whale-safe bucket-routed
     spelling (operators/text_ops.py:216) that puts the scale path
     under the driver hash (the kmeans_sample precedent): per-domain
     quality-ordered running token total <= cap, with bucket-level
@@ -3456,7 +3445,7 @@ def q_domain_token_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
     single-task whale window; only boundary-bucket rows run a
     running-sum window, partitioned down to id-range sub-buckets. The
     oracle is the naive per-domain window the branch provably equals
-    (NULL-key joins eqNullSafe — the r10 ADVICE fix — with the repro
+    (NULL-key joins eqNullSafe, with the repro
     and a NULL-key fuzz pinned in tests/test_domain_cap.py)."""
     from pydata_vector_search_spark.operators.text_ops import \
         domain_token_cap
@@ -3469,8 +3458,7 @@ def q_domain_token_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_collocations_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PMI collocation mining (r11; staged + oracle-validated r10):
-    top-30 adjacent-bigram collocations by pointwise mutual
+    """PMI collocation mining: top-30 adjacent-bigram collocations by pointwise mutual
     information (operators/collocations.py:43) — corpus-level phrase
     discovery, the statistics complement of the bigram-LM scorer.
     Exact long counts; the one float is a single ln of the fixed-
@@ -3485,16 +3473,16 @@ def q_collocations_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_curation_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Full corpus-curation chain (r12 — the LAST free window slot;
-    staged + oracle-validated at three SFs in r11): per-domain token
+    """Full corpus-curation chain (oracle-validated at three SFs):
+    per-domain token
     cap -> exact dedup over the survivors -> quality gate -> global
     token budget, composed as ONE Catalyst plan
     (operators/curation.py:38, Engine.curate_corpus). Declared on the
     cap stage's DISTRIBUTED branch (whale-safe bucket routing — the
     domain_token_cap precedent); the budget stage routes through the
     quality histogram with the distributed-prefix-sum escape and the
-    naive-window NULL-token contract (leading NULL rows drop — r12
-    ADVICE-medium, pinned cross-engine in tests/test_curation.py).
+    naive-window NULL-token contract (leading NULL rows drop, pinned
+    cross-engine in tests/test_curation.py).
     The chained oracle replays all four stages, so the value hash pins
     the stage BOUNDARIES, closing the corpus-to-epoch story begun by
     dataloader_epoch (mix -> budget -> pack -> shard). Output is
@@ -3534,18 +3522,8 @@ def entry(spark: SparkSession) -> DataFrame:
 def queries() -> dict[str, Callable[[SparkSession, str],
                                     DataFrame]]:
     return {
-        # --- first-50 driver window (hash-checked in declaration order).
-        # --- Round-16 rotation: the mandatory 2-round staleness cycle
-        # --- (tools/window_audit.py) — ALL 50 queries whose latest
-        # --- driver-green row is r13 rotate in this round. This is the
-        # --- set that puts the r13 fan-out/winnow/jaccard parallelism
-        # --- consumers (graph_triangles, pagerank, kmeans, bpe_train,
-        # --- lm_perplexity, span_dedup, ...) plus the streaming suite
-        # --- (stream_dedup, stream_index_patch, stream_stream_join,
-        # --- session_windows, sliding_windows) back under the driver
-        # --- hash on their 2-round cadence. Every query left outside is
-        # --- r14/r15-green, <= 2 rounds old; r17's window = the 50
-        # --- r14-greens.
+        # --- first-50 driver window (hash-checked in declaration order;
+        # --- tools/window_audit.py rotates which queries sit in it).
         "agg_pricing_summary": q_agg_pricing_summary,
         "array_functions": q_array_functions,
         "asof_join": q_asof_join,
@@ -4041,7 +4019,7 @@ _INCR_MM_SQL = """
 def _kmeans_oracle_sql(k: int = 8, iterations: int = 3,
                        scale: int = 10 ** 6, offset: float = 1.0) -> str:
     """Integer-exact Lloyd's k-means replayed as an unrolled CTE chain
-    (validated EXACT at sf0.001+sf0.01 in r09). One
+    (validated EXACT at sf0.001+sf0.01). One
     recursive CTE cannot express the recurrence — each round reads the
     previous centroids twice (assignment AND the empty-cluster
     fallback), so the chain is unrolled per iteration: quantized
@@ -4121,7 +4099,7 @@ ORDER BY cluster_id, vec_id"""
 
 # Per-node triangle counts over the part co-purchase graph, replayed as
 # a naive canonical-edge three-way self-join (validated EXACT at
-# sf0.001+sf0.01 in r09).
+# sf0.001+sf0.01).
 _TRIANGLE_ORACLE_SQL = """
 WITH pair0 AS (
   SELECT l1.l_partkey AS u, l2.l_partkey AS v
@@ -4156,7 +4134,7 @@ def _bpe_oracle_sql(num_merges: int = 12, min_count: int = 1,
                     min_pair_count: int = 2,
                     max_word_types: int = 1_000_000) -> str:
     """BPE training replayed step-by-step in SQL (validated EXACT at
-    sf0.001+sf0.01 in r09): the word-frequency table
+    sf0.001+sf0.01): the word-frequency table
     (same BPE_ISH_PATTERN pre-tokenization, same count-desc/word-asc
     cap), then ``num_merges`` unrolled stages of [adjacent-pair count
     -> (count desc, left, right) argmax -> greedy LEFT-TO-RIGHT merge
@@ -4215,7 +4193,7 @@ def _semdedup_kmeans_oracle_sql(k: int = 8, iterations: int = 3,
                                 threshold: float = 0.3,
                                 round_to: int = 6) -> str:
     """Paper-faithful SemDeDup replay (validated EXACT at
-    sf0.001+sf0.01 in r10): the unrolled kmeans assignment chain + within-
+    sf0.001+sf0.01): the unrolled kmeans assignment chain + within-
     cluster rounded-cosine pairs + recursive transitive hull +
     min-id-survives anti-join, rolled up per label — the
     `semantic_dedup` declared-query tail verbatim with k-means
@@ -4258,7 +4236,7 @@ GROUP BY label ORDER BY label"""
 # IGNORE NULL arguments (Spark and DuckDB alike), so term 1 reads
 # least(NULL, 1.0) = 1.0 and term 3's least(NULL, 1.0) = 1.0 — the
 # total is 0.4*1.0 + 0.3*0.5 + 0.3*0.0 = 0.55, never NULL (the
-# verify-skill least/greatest parity note; r12 ADVICE-low fix).
+# least/greatest parity note).
 _QUALITY_BODY_SQL = r"""0.4 * least(length(text) / 200.0, 1.0)
        + 0.3 * (CASE WHEN length(text)::DOUBLE
                           / len(regexp_split_to_array(trim(text), '\s+'))
@@ -4271,14 +4249,14 @@ _DOMAIN_CAP_QUALITY_SQL = f"round({_QUALITY_BODY_SQL}, 6)"
 # RAW token count (NULL text -> NULL) for the budget stage's running
 # sum: sum() skips NULLs, so leading NULL-token rows drop on
 # `NULL <= budget` — select_token_budget's naive-window NULL contract
-# (r12 ADVICE-medium). Only the CAP stage coalesces to 0 (the
+# Only the CAP stage coalesces to 0 (the
 # domain_token_cap contract).
 _RAW_NT_SQL = r"""len(regexp_split_to_array(trim(text), '\s+'))::BIGINT"""
 
 
 def _domain_cap_oracle_sql(cap_tokens: int = 600) -> str:
     """Per-domain token cap replayed as the naive per-domain
-    running-sum window (validated EXACT at sf0.001+sf0.01 in r10).
+    running-sum window (validated EXACT at sf0.001+sf0.01).
     The declared Spark side is the DISTRIBUTED branch —
     the oracle is the single-window spelling it provably equals:
     (quality DESC NULLS LAST, id) order, inclusive running total <=
@@ -4306,7 +4284,7 @@ ORDER BY doc_id
 def _collocations_oracle_sql(min_count: int = 5, top_k: int = 30) -> str:
     """PMI collocations replayed exactly (promoted from
     tools/collocations_oracle_draft.py, validated EXACT at
-    sf0.001+sf0.01 in r10; the draft AND tests/test_collocations.py
+    sf0.001+sf0.01; the draft AND tests/test_collocations.py
     import this builder): exact long bigram counts, marginals over the
     distinct-PAIR table, one ln of the fixed-association integer ratio
     ``(c12 * N) / (cl * cr)`` floored into micro-nats, total output
@@ -4349,14 +4327,14 @@ def _curation_chain_oracle_sql(cap_tokens: int = 2000,
                                budget_tokens: int = 5000) -> str:
     """The full corpus-curation composition replayed as one chained
     query (promoted from tools/curation_chain_oracle_draft.py,
-    validated EXACT at sf0.001+sf0.01+sf0.1 in r11 and re-validated
-    after the r12 NULL fix; the draft AND tests/test_curation.py
+    validated EXACT at sf0.001+sf0.01+sf0.1, NULL handling included;
+    the draft AND tests/test_curation.py
     import this builder): per-domain token cap (coalesced counts, the
     domain_token_cap contract) -> exact dedup (min id per
     normalized-text md5 fingerprint over the cap SURVIVORS) -> quality
     gate (2-dp rounded threshold) -> global token budget (RAW counts —
     leading NULL-token rows drop, the select_token_budget naive-window
-    NULL contract, r12 ADVICE-medium). Each stage is the operator its
+    NULL contract). Each stage is the operator its
     standalone green oracle pins, so the value hash also pins the
     stage BOUNDARIES."""
     q = _QUALITY_BODY_SQL
@@ -6241,7 +6219,7 @@ def oracle_sql() -> dict[str, str]:
             FROM documents
         """,
     }
-    # round-6 additions sharing existing oracle bodies: the distributed
+    # Queries sharing existing oracle bodies: the distributed
     # CC query replays the same transitive closure; IVF×PQ at
     # nprobe=all + shortlist=corpus equals exact KNN
     d["dedup_clusters_dist"] = d["dedup_clusters"]
@@ -6479,7 +6457,7 @@ def oracle_sql() -> dict[str, str]:
             SELECT * FROM dl UNION ALL SELECT * FROM el
             ORDER BY part, grp
         """
-    # r08: the auto dispatcher must be output-invisible — same oracle
+    # The auto dispatcher must be output-invisible — same oracle
     # body as the two physical strategies it routes between
     d["jaccard_auto"] = d["jaccard_join"]
     # PPJoin branch of the dispatcher: all-pairs exact Jaccard over the
@@ -6508,7 +6486,7 @@ def oracle_sql() -> dict[str, str]:
     # counts (the tokenize.py hook's deterministic fallback) at 192.
     # coalesce(text, '') matches tokenize_counts' fillna('') — a NULL
     # text must count 0, not poison the recursive fill with NULL ln
-    # (r08 ADVICE; the winnow oracle already coalesces defensively)
+    # (the winnow oracle already coalesces defensively)
     d["pack_tokenized"] = r"""
             WITH RECURSIVE d AS (
                 SELECT doc_id,
@@ -6610,8 +6588,8 @@ def oracle_sql() -> dict[str, str]:
     # hash-bucket vocabulary (4096, the declared query's bounded-model
     # path; real collisions at sf), floored micro-nat log tables, the
     # closed-form unseen-token accounting, and the (score DESC, label
-    # DESC) argmax — rolled up per predicted class. Validated uncapped
-    # during r08; the bucket transform is the only addition.
+    # DESC) argmax — rolled up per predicted class. The bucket transform
+    # is the only addition to the uncapped form.
     d["nb_classify"] = r"""
             WITH toks AS (
                 SELECT doc_id, lang,
@@ -6776,8 +6754,8 @@ def oracle_sql() -> dict[str, str]:
                    max(n) AS max_member
             FROM comp GROUP BY cluster_id ORDER BY cluster_id
         """
-    # r10 declarations — each builder validated EXACT at sf0.001+sf0.01
-    # in r09 before promotion.
+    # Each builder below was validated EXACT at sf0.001+sf0.01 before
+    # promotion.
     d["kmeans"] = _kmeans_oracle_sql(k=8, iterations=3)
     d["kmeans_sample"] = _cluster_sample_oracle_sql(k=8, iterations=3,
                                                     per_cluster=10)

@@ -63,10 +63,10 @@ class Engine:
                       query_vec: Sequence[float] | Column, k: int = 10,
                       metric: str = "cosine", filter: Column | None = None,
                       **kw) -> DataFrame:
-        """Exact top-k vector search (cosine/dot/l2, all JVM-codegen
-        expressions); ``filter`` prunes BEFORE the distance top-k — the
-        pre-filter hybrid the reference post-filters for (demo.ipynb
-        c13). See operators.knn.vector_search."""
+        """Exact top-k vector search (cosine/dot/l2; a constant query is
+        scored by one Arrow kernel per batch); ``filter`` prunes BEFORE the
+        distance top-k — the pre-filter hybrid the reference post-filters
+        for (demo.ipynb c13). See operators.knn.vector_search."""
         df = self.table(table) if isinstance(table, str) else table
         return knn.vector_search(df, vector_col, query_vec, k=k,
                                  metric=metric, filter=filter, **kw)
@@ -254,8 +254,8 @@ class Engine:
         df = self.table(table) if isinstance(table, str) else table
         fns = {"minhash": dedup.minhash_neardup_pairs,
                "simhash": dedup.simhash_neardup_pairs,
-               # "jaccard" = the measured duplicate-heaviness rule
-               # (r07): count-based on near-unique corpora, PPJoin
+               # "jaccard" = the measured duplicate-heaviness rule:
+               # count-based on near-unique corpora, PPJoin
                # once hot shingles amplify the co-occurrence join —
                # both strategies output-identical and separately
                # pinned. NOTE: the auto rule runs its probe aggregate
@@ -405,7 +405,7 @@ class Engine:
         return stream_upsert_sink(stream_df, self.catalog, table, key=key,
                                   checkpoint=checkpoint, **kw)
 
-    # -- retrieval / pipeline gates (round 5) ------------------------------
+    # -- retrieval / pipeline gates ----------------------------------------
     def bm25_search(self, table: str | DataFrame, text_col: str,
                     id_col: str, query_terms, k: int = 10,
                     **kw) -> DataFrame:
@@ -592,7 +592,7 @@ class Engine:
             refresh_agg
         return refresh_agg(self.catalog, source, name)
 
-    # -- training-data assembly (r06) -------------------------------------
+    # -- training-data assembly -------------------------------------------
     def dedup_paragraphs(self, table: str | DataFrame, text_col: str,
                          id_col: str, **kw) -> DataFrame:
         """Sub-document paragraph dedup (Dolma/RefinedWeb/C4 rule)."""

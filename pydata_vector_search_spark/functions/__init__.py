@@ -1,7 +1,10 @@
-"""Column-expression function library (JVM-side, codegen-friendly).
+"""Column-expression function library.
 
-Everything here returns a pyspark ``Column`` built from built-in functions —
-never a Python UDF — so the hot path stays inside whole-stage codegen.
+Every function returns a pyspark ``Column``. The vector distances
+against a constant query (``functions.vector.distance_expr_lit``) and
+between two vector columns (``distance_arrow``) are Arrow ``pandas_udf``
+kernels; the distances exported here are their higher-order-function
+Catalyst folds, and the text functions are built-in expressions.
 """
 
 from pydata_vector_search_spark.functions.vector import (
@@ -10,13 +13,6 @@ from pydata_vector_search_spark.functions.vector import (
     l2_distance,
     cosine_similarity,
     cosine_distance,
-    dot_product_lit,
-    l2_distance_lit,
-    cosine_similarity_lit,
-    cosine_distance_lit,
-    dot_product_dim,
-    l2_distance_dim,
-    cosine_similarity_dim,
 )
 from pydata_vector_search_spark.functions.text import (
     token_count,
@@ -29,9 +25,6 @@ from pydata_vector_search_spark.functions.text import (
 
 __all__ = [
     "dot_product", "l2_norm", "l2_distance", "cosine_similarity",
-    "cosine_distance", "dot_product_lit", "l2_distance_lit",
-    "cosine_similarity_lit", "cosine_distance_lit", "dot_product_dim",
-    "l2_distance_dim", "cosine_similarity_dim", "token_count",
-    "normalized_text", "fingerprint_md5", "rolling_hash", "quality_score",
-    "lang_id",
+    "cosine_distance", "token_count", "normalized_text", "fingerprint_md5",
+    "rolling_hash", "quality_score", "lang_id",
 ]

@@ -1,37 +1,41 @@
-"""Vector distance expressions over ``array<float>`` columns.
+"""Vector distances over ``array<float>`` / ``array<double>`` columns.
 
-The reference gets cosine distance from the Lance index inside the
-`hudi_vector_search` TVF, emitting a `_distance` pseudo-column with
-score = 1 - _distance (demo.ipynb c11:8,10, raw L724-728). Here the metric
-is a first-class Catalyst expression over plain `array<float>` columns, in
-two spellings (equal after in-query rounding, like the DuckDB oracle):
+The reference scores every search with the cosine ``_distance`` that the
+Lance index inside the ``hudi_vector_search`` TVF computes, with
+score = 1 - _distance (demo.ipynb c11:7-13, raw L724-728). Here the three
+metrics (cosine, l2, dot) have one form per job:
 
-* **Unrolled scalar form** (``*_lit`` / ``*_dim``) — the hot path. When the
-  query vector is a literal, or the dimension is known, the dot/norm folds
-  expand to a left-deep tree of ``GetArrayItem``/multiply/add scalar
-  expressions that run INSIDE whole-stage codegen. The higher-order-function
-  form does not: Spark evaluates ``zip_with``/``aggregate`` lambdas
-  interpreted, a measured ~4-30× penalty on scan-bound operators (same
-  pitfall engineered out of minhash/simhash — see operators/dedup.py).
-* **HOF form** (``dot_product``/``l2_distance``/...) — dimension-agnostic
-  semantic reference, kept for column-vs-column use where the dimension is
-  unknown. Explicit left-to-right double-precision fold; agrees with the
-  unrolled form (and the DuckDB oracle) after in-query rounding.
+* ``distance_expr_lit`` — against a constant query vector: the exact-search
+  scan. An Arrow ``pandas_udf`` closes over the float64 query; each batch
+  is one ``matrix @ q``, accumulated in float64. The query lives in the
+  Python closure, not in the plan's expressions, so the plan of every
+  search is the same and a new query vector generates no new code.
+* ``distance_arrow`` — column against column, for batch-join candidate
+  scoring. The same per-batch kernel.
+* The higher-order-function fold (``dot_product``, ``cosine_distance``,
+  ... and ``distance_expr``) — a Catalyst expression for query vectors
+  that are themselves Columns; it is also the body of the SQL functions
+  (functions/sql.py) and the reference the kernels are tested against.
 
-Catalyst pushes filters *below* either form (the pre-filter hybrid search
-the reference explicitly lacks, demo.ipynb c13:1-4). At 100 TB these
-expressions scan embarrassingly parallel over partitions — no shuffle, no
-driver involvement; the only cost is bytes read, which column pruning keeps
-proportional to the embedding column itself.
+All forms agree after in-query rounding (like the DuckDB oracle).
+Catalyst pushes filters below the distance column (the pre-filter hybrid
+search the reference lacks, demo.ipynb c13:1-4), and the scan stays
+embarrassingly parallel over partitions: no shuffle, no driver work, and
+column pruning keeps the bytes read proportional to the vector column.
 """
 
 from __future__ import annotations
 
-import math
 from collections.abc import Sequence
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import Column, functions as F
+from pyspark.sql.functions import pandas_udf
+
+
+def _c(x: Column | str) -> Column:
+    return F.col(x) if isinstance(x, str) else x
 
 
 def _to_double(x: Column) -> Column:
@@ -40,19 +44,19 @@ def _to_double(x: Column) -> Column:
 
 def dot_product(a: Column | str, b: Column | str) -> Column:
     """Left-to-right double-precision fold of elementwise products."""
-    a, b = F.col(a) if isinstance(a, str) else a, F.col(b) if isinstance(b, str) else b
+    a, b = _c(a), _c(b)
     prod = F.zip_with(a, b, lambda x, y: _to_double(x) * _to_double(y))
     return F.aggregate(prod, F.lit(0.0), lambda acc, x: acc + x)
 
 
 def l2_norm(a: Column | str) -> Column:
-    a = F.col(a) if isinstance(a, str) else a
+    a = _c(a)
     sq = F.transform(a, lambda x: _to_double(x) * _to_double(x))
     return F.sqrt(F.aggregate(sq, F.lit(0.0), lambda acc, x: acc + x))
 
 
 def l2_distance(a: Column | str, b: Column | str) -> Column:
-    a, b = F.col(a) if isinstance(a, str) else a, F.col(b) if isinstance(b, str) else b
+    a, b = _c(a), _c(b)
     d = F.zip_with(a, b, lambda x, y: (_to_double(x) - _to_double(y)) ** 2)
     return F.sqrt(F.aggregate(d, F.lit(0.0), lambda acc, x: acc + x))
 
@@ -73,261 +77,104 @@ _METRICS = {
 }
 
 
-def distance_expr(metric: str, a: Column | str, b: Column | str) -> Column:
-    try:
-        return _METRICS[metric](a, b)
-    except KeyError:
+def _check_metric(metric: str) -> None:
+    if metric not in _METRICS:
         raise ValueError(f"unknown metric {metric!r}; one of {sorted(_METRICS)}")
 
 
+def distance_expr(metric: str, a: Column | str, b: Column | str) -> Column:
+    _check_metric(metric)
+    return _METRICS[metric](a, b)
+
+
 # --------------------------------------------------------------------------
-# unrolled (codegen-path) forms
+# Arrow kernels: one numpy pass per batch
 # --------------------------------------------------------------------------
-# Mathematically identical to the HOF folds above; last-ulp bits may differ
-# (different association order), which every declared query already absorbs
-# by rounding in-query — the same tolerance that makes the DuckDB oracle
-# comparable at all. Two codegen facts drive the term shapes below, both
-# measured at 1M rows × 64 dims on this container:
-#
-# 1. BALANCED add tree, not a left-deep chain. A 64-deep nested Add
-#    generates one serial dependency chain in a single expression; pairwise
-#    reduction halves the depth to 6 and lets the JIT pipeline the adds
-#    (left-deep cosine 5.7s → balanced 0.5s).
-# 2. Every GetArrayItem must appear in SOME repeated subexpression.
-#    Codegen's subexpression elimination promotes repeated subtrees to
-#    statement-level locals, which the method splitter can then cut into
-#    JIT-compilable pieces; 64 single-use getItems inline into one huge
-#    method that HotSpot refuses to compile (plain dot 9.5s, l2-via-pow
-#    11.7s → with a repeated term 0.4-0.5s). cosine and norm repeat
-#    elements naturally (a[i] in dot and norm; a[i]*a[i]); standalone dot
-#    uses (m+m)/2 — exact for every double below max/2, inf/NaN/-0.0
-#    preserving — and l2 spells (d*d), not pow(d,2), so d repeats.
 
-def _c(x: Column | str) -> Column:
-    return F.col(x) if isinstance(x, str) else x
+def _matrix(vs: np.ndarray, dim: int) -> np.ndarray:
+    """Non-NULL vectors as one ``rows × dim`` float64 matrix."""
+    lens = np.fromiter(map(len, vs), np.int64, len(vs))
+    bad = lens[lens != dim]
+    if bad.size:
+        raise ValueError(f"vector of length {int(bad[0])} does not match "
+                         f"the query vector's length {dim}")
+    if not len(vs):
+        return np.empty((0, dim))
+    return np.stack(vs).astype(np.float64, copy=False)
 
 
-def _balanced_sum(terms: list[Column]) -> Column:
-    while len(terms) > 1:
-        terms = [terms[i] + terms[i + 1] if i + 1 < len(terms) else terms[i]
-                 for i in range(0, len(terms), 2)]
-    return terms[0]
-
-
-def _elem(a: Column, i: int) -> Column:
-    return a.getItem(i).cast("double")
-
-
-# --- SQL-text spellings of the unrolled forms ------------------------------
-# Building a dim-64 unrolled tree out of Column operator calls costs
-# hundreds of driver Py4J round-trips (~1.5 s measured at dim=64) — every
-# time the plan is BUILT, before any data moves. Rendering the identical
-# expression as ONE SQL string and letting the JVM parse it is ~50 ms.
-# The parsed tree is node-for-node the tree the Column operators build
-# (same casts, literals, associativity), so results are bit-identical —
-# pinned in tests/test_vector_functions.py. String inputs take this path;
-# Column inputs (no safe way to render arbitrary Columns to SQL) keep the
-# operator-built tree.
-
-def _fmt_lit(v: float) -> str:
-    v = float(v)
-    if not math.isfinite(v):
-        raise ValueError(f"non-finite query-vector component: {v}")
-    return f"{v!r}D"          # repr round-trips doubles exactly
-
-
-def _balanced_sum_sql(terms: list[str]) -> str:
-    while len(terms) > 1:
-        terms = [f"({terms[i]} + {terms[i + 1]})" if i + 1 < len(terms)
-                 else terms[i] for i in range(0, len(terms), 2)]
-    return terms[0]
-
-
-def _elem_sql(name: str, i: int) -> str:
-    return f"CAST(`{name}`[{i}] AS DOUBLE)"
-
-
-def _dot_sql(name: str, q: Sequence[float], baited: bool) -> str:
-    def term(i: int) -> str:
-        m = f"({_elem_sql(name, i)} * {_fmt_lit(q[i])})"
-        return f"(({m} + {m}) / 2.0D)" if baited else m
-    return _balanced_sum_sql([term(i) for i in range(len(q))])
-
-
-def _norm_sql(name: str, dim: int) -> str:
-    sq = [f"({_elem_sql(name, i)} * {_elem_sql(name, i)})"
-          for i in range(dim)]
-    return f"SQRT({_balanced_sum_sql(sq)})"
-
-
-def dot_product_lit(a: Column | str, q: Sequence[float]) -> Column:
-    """Dot product against a LITERAL query vector, unrolled to scalar
-    multiply/add codegen expressions (the exact-KNN scan hot path)."""
-    if isinstance(a, str):
-        return F.expr(_dot_sql(a, q, baited=True))
-    a = _c(a)
-
-    def term(i: int) -> Column:
-        m = _elem(a, i) * float(q[i])
-        return (m + m) / 2.0            # repeated subtree → CSE (see header)
-
-    return _balanced_sum([term(i) for i in range(len(q))])
-
-
-def _dot_terms(a: Column, q: Sequence[float]) -> Column:
-    # un-baited dot for composition with a norm over the same elements —
-    # the norm's a[i]*a[i] already repeats every getItem
-    return _balanced_sum([_elem(a, i) * float(q[i]) for i in range(len(q))])
-
-
-def l2_norm_dim(a: Column | str, dim: int) -> Column:
-    a = _c(a)
-    return F.sqrt(_balanced_sum([_elem(a, i) * _elem(a, i)
-                                 for i in range(dim)]))
-
-
-def _py_norm(q: Sequence[float]) -> float:
-    acc = 0.0
-    for v in q:
-        acc += float(v) * float(v)
-    return math.sqrt(acc)
-
-
-def cosine_similarity_lit(a: Column | str, q: Sequence[float]) -> Column:
-    if isinstance(a, str):
-        return F.expr(f"({_dot_sql(a, q, baited=False)} / "
-                      f"({_norm_sql(a, len(q))} * {_fmt_lit(_py_norm(q))}))")
-    a = _c(a)
-    return _dot_terms(a, q) / (l2_norm_dim(a, len(q)) * _py_norm(q))
-
-
-def cosine_distance_lit(a: Column | str, q: Sequence[float]) -> Column:
-    if isinstance(a, str):
-        return F.expr(
-            f"(1.0D - ({_dot_sql(a, q, baited=False)} / "
-            f"({_norm_sql(a, len(q))} * {_fmt_lit(_py_norm(q))})))")
-    return F.lit(1.0) - cosine_similarity_lit(a, q)
-
-
-def l2_distance_lit(a: Column | str, q: Sequence[float]) -> Column:
-    if isinstance(a, str):
-        def term_sql(i: int) -> str:
-            d = f"({_elem_sql(a, i)} - {_fmt_lit(q[i])})"
-            return f"({d} * {d})"
-        return F.expr(
-            f"SQRT({_balanced_sum_sql([term_sql(i) for i in range(len(q))])})")
-    a = _c(a)
-
-    def term(i: int) -> Column:
-        d = _elem(a, i) - float(q[i])
-        return d * d                    # d repeats → CSE; pow(d,2) doesn't
-
-    return F.sqrt(_balanced_sum([term(i) for i in range(len(q))]))
-
-
-_METRICS_LIT = {
-    "cosine": cosine_distance_lit,
-    "l2": l2_distance_lit,
-    "dot": lambda a, q: -dot_product_lit(a, q),
-}
+def _distances(metric: str, A: np.ndarray, B: np.ndarray) -> np.ndarray:
+    """Distances of the rows of ``A`` to ``B``: one vector (a constant
+    query) or a row-aligned matrix. NaN where the distance is undefined
+    (a zero norm under cosine); the Arrow conversion returns NaN as NULL."""
+    if metric == "l2":
+        # Σ(a−b)² directly: the |a|²−2ab+|b|² expansion cancels
+        # catastrophically for near-identical vectors
+        return np.sqrt(((A - B) ** 2).sum(axis=1))
+    dots = A @ B if B.ndim == 1 else (A * B).sum(axis=1)
+    if metric == "dot":
+        return -dots
+    norms = np.linalg.norm(A, axis=1) * np.linalg.norm(B, axis=-1)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        return np.where(norms == 0, np.nan, 1.0 - dots / norms)
 
 
 def distance_expr_lit(metric: str, a: Column | str,
                       q: Sequence[float]) -> Column:
-    """Codegen-path distance against a literal query vector."""
-    try:
-        return _METRICS_LIT[metric](a, q)
-    except KeyError:
-        raise ValueError(f"unknown metric {metric!r}; one of {sorted(_METRICS_LIT)}")
+    """Distance of every vector in column ``a`` to the constant query ``q``.
 
+    The query is checked on the driver, before any job: an empty query, a
+    non-finite component or (under cosine) a zero norm raises
+    ``ValueError``. A distance that is not a number is NULL: a NULL row, a
+    zero-norm row under cosine, a row with NaN components. A row of another
+    length than ``q`` fails the query with an error naming both lengths."""
+    _check_metric(metric)
+    qv = np.asarray(q, dtype=np.float64)
+    if qv.ndim != 1 or not qv.size:
+        raise ValueError("the query vector must be a non-empty 1-D sequence")
+    if not np.isfinite(qv).all():
+        raise ValueError("non-finite query-vector component: "
+                         f"{qv[~np.isfinite(qv)][0]}")
+    if metric == "cosine" and not np.linalg.norm(qv):
+        raise ValueError("a zero-norm query vector has no cosine distance")
+    dim = qv.size
 
-def dot_product_dim(a: Column | str, b: Column | str, dim: int) -> Column:
-    """Column-vs-column dot product unrolled for a KNOWN dimension (batch
-    KNN joins score corpus×query pairs per row — the HOF form would pay
-    the interpreter on every pair)."""
-    a, b = _c(a), _c(b)
+    @pandas_udf("double")
+    def _d(xs: pd.Series) -> pd.Series:
+        valid = xs.notna().to_numpy()
+        out = np.full(len(xs), np.nan)
+        out[valid] = _distances(metric, _matrix(xs.to_numpy()[valid], dim), qv)
+        return pd.Series(out)
 
-    def term(i: int) -> Column:
-        m = _elem(a, i) * _elem(b, i)
-        return (m + m) / 2.0
-
-    return _balanced_sum([term(i) for i in range(dim)])
-
-
-def cosine_similarity_dim(a: Column | str, b: Column | str,
-                          dim: int) -> Column:
-    a, b = _c(a), _c(b)
-    dot = _balanced_sum([_elem(a, i) * _elem(b, i) for i in range(dim)])
-    return dot / (l2_norm_dim(a, dim) * l2_norm_dim(b, dim))
-
-
-def l2_distance_dim(a: Column | str, b: Column | str, dim: int) -> Column:
-    a, b = _c(a), _c(b)
-
-    def term(i: int) -> Column:
-        d = _elem(a, i) - _elem(b, i)
-        return d * d
-
-    return F.sqrt(_balanced_sum([term(i) for i in range(dim)]))
-
-
-_METRICS_DIM = {
-    "cosine": lambda a, b, d: F.lit(1.0) - cosine_similarity_dim(a, b, d),
-    "l2": l2_distance_dim,
-    "dot": lambda a, b, d: -dot_product_dim(a, b, d),
-}
-
-
-def distance_expr_dim(metric: str, a: Column | str, b: Column | str,
-                      dim: int) -> Column:
-    """Codegen-path column-vs-column distance for a known dimension."""
-    try:
-        return _METRICS_DIM[metric](a, b, dim)
-    except KeyError:
-        raise ValueError(f"unknown metric {metric!r}; one of {sorted(_METRICS_DIM)}")
+    # Declared nondeterministic only to keep Catalyst from pushing the
+    # distance projection below an input's LIMIT: between that limit and
+    # its ORDER BY, the extracted Python UDF would split the input's
+    # TakeOrderedAndProject into a global range sort (a PQ shortlist's
+    # re-rank went from 1 Spark job to 4).
+    return _d.asNondeterministic()(_c(a))
 
 
 def distance_arrow(metric: str, a: Column | str, b: Column | str) -> Column:
-    """Arrow-batched column-vs-column distance: one numpy kernel per batch.
-
-    Third spelling, for BATCH-JOIN candidate scoring. The unrolled scalar
-    form (``*_dim``) generates hundred-term methods that Janino compiles
-    per stage — measured 1.5–2 s per stage at dim=64, which dominates
-    multi-stage join plans (probe shortlist → score → rank) no matter how
-    few rows flow. This form has zero codegen footprint and BLAS-class
-    per-batch throughput (contiguous float64 ops, no per-element null
-    branching), so it wins twice on candidate joins; the unrolled form
-    stays for single-stage scans where one compile amortizes over the
-    whole table. Double-precision accumulate; agrees with both other
-    spellings (and the DuckDB oracle) after in-query rounding."""
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-
-    if metric not in ("cosine", "l2", "dot"):
-        raise ValueError(f"unknown metric {metric!r}")
+    """Column-vs-column distance for batch-join candidate scoring, with the
+    same per-batch kernel and edge behaviour as ``distance_expr_lit``: a
+    pair with a NULL side gets a NULL distance, and ``b`` must have the
+    length of ``a`` (the query side)."""
+    _check_metric(metric)
 
     @pandas_udf("double")
     def _d(xs: pd.Series, ys: pd.Series) -> pd.Series:
-        if xs.empty:
-            return pd.Series([], dtype="float64")
-        A = np.stack(xs.to_numpy()).astype(np.float64)
-        B = np.stack(ys.to_numpy()).astype(np.float64)
-        dots = (A * B).sum(axis=1)
-        if metric == "cosine":
-            na = np.linalg.norm(A, axis=1)
-            nb = np.linalg.norm(B, axis=1)
-            return pd.Series(1.0 - dots / (na * nb))
-        if metric == "dot":
-            return pd.Series(-dots)
-        # l2 as Σ(a−b)² directly — the |a|²−2ab+|b|² expansion cancels
-        # catastrophically for near-identical vectors (rounding parity)
-        return pd.Series(np.sqrt(((A - B) ** 2).sum(axis=1)))
+        valid = (xs.notna() & ys.notna()).to_numpy()
+        xs, ys = xs.to_numpy()[valid], ys.to_numpy()[valid]
+        dim = len(xs[0]) if len(xs) else 0
+        out = np.full(len(valid), np.nan)
+        out[valid] = _distances(metric, _matrix(xs, dim), _matrix(ys, dim))
+        return pd.Series(out)
 
     return _d(_c(a), _c(b))
 
 
 def query_vector_lit(vec) -> Column:
-    """A query vector as a literal array<double> column (Catalyst folds it
-    into codegen — the reference achieves the same by executing a scalar
-    subquery to a literal, demo.ipynb c11:10)."""
+    """A query vector as a literal ``array<double>`` column, for the HOF
+    forms (the reference resolves its query subquery to a literal the same
+    way, demo.ipynb c11:10)."""
     return F.array(*[F.lit(float(v)) for v in vec])

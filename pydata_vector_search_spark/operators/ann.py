@@ -41,7 +41,6 @@ import pyarrow.fs as pafs
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql.types import StructType
 
-from pydata_vector_search_spark.functions.vector import query_vector_lit
 from pydata_vector_search_spark.operators.knn import vector_search
 
 _CID = "__cid"
@@ -587,8 +586,8 @@ def ivf_knn_join(spark: SparkSession, index: IVFIndex, queries: DataFrame,
     if round_to is not None:    # round BEFORE the rank for cross-engine ties
         dist = F.round(dist, round_to)
     cand = probes.join(data, _CID).withColumn(distance_col, dist)
-    wk = Window.partitionBy(left_id).orderBy(F.col(distance_col).asc(),
-                                             F.col(right_id).asc())
+    wk = Window.partitionBy(left_id).orderBy(
+        F.col(distance_col).asc_nulls_last(), F.col(right_id).asc())
     return (cand.withColumn("__rn", F.row_number().over(wk))
                 .filter(F.col("__rn") <= k)
                 .select(left_id, right_id, distance_col))

@@ -25,10 +25,13 @@ O(N²) candidate pairs but almost no Jaccard evidence).
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from pydata_vector_search_spark.functions.text import normalized_text
-from pydata_vector_search_spark.functions.vector import cosine_similarity
+from pydata_vector_search_spark.functions.vector import (_matrix,
+                                                         cosine_similarity)
 
 
 # --------------------------------------------------------------------------
@@ -123,7 +126,7 @@ def _fan_out(df: DataFrame, id_col: str) -> DataFrame:
     bit-vote expressions that should use every core. Hash on the id keeps
     the shuffle payload small and the layout reusable by later groupBys.
 
-    GUARDED (r13): when the input already carries at least the target
+    GUARDED: when the input already carries at least the target
     parallelism — the normal case on a real cluster, where 100 TB
     arrives as tens of thousands of splits — this is the identity.
     The unguarded version would shuffle the whole corpus text once per
@@ -146,7 +149,7 @@ def _fan_out(df: DataFrame, id_col: str) -> DataFrame:
     the missed case serializes at most a few-hundred-MB batch — whereas
     "fixing" it by distrusting post-shuffle counts would re-shuffle
     arbitrarily large post-join corpora on every dedup call, the exact
-    corpus-scale exchange the r13 guard exists to prevent. True
+    corpus-scale exchange the guard exists to prevent. True
     executed partitioning is unknowable before execution (AQE re-plans
     per stage), so the pre-AQE count is the best cheap signal."""
     target = df.sparkSession.sparkContext.defaultParallelism
@@ -174,9 +177,8 @@ def _minhash_bands(df: DataFrame, text_col: str, id_col: str,
     is docs × num_hashes regardless of shingle count — the property
     that matters at 100 TB.
 
-    ``base`` MATERIALIZES once (r16's jaccard threading pattern,
-    extended here in r17): the signature pipeline and the verify join's
-    two sides all consume it, and the former ``_barrier`` exchange was
+    ``base`` MATERIALIZES once (the jaccard threading pattern): the
+    signature pipeline and the verify join's two sides all consume it, and the former ``_barrier`` exchange was
     NOT in practice shared between them — each consumer branch gets
     different pushed-down IsNotNull predicates below the exchange, the
     canonical plans stop matching, and the executed plan re-scanned and
@@ -274,13 +276,13 @@ def jaccard_similarity_join(df: DataFrame, text_col: str, id_col: str,
     16.7 s at 10×-duplicated sf0.1, 50k docs / 250k true pairs)."""
     if _ex is not None:
         # pre-hashed exploded occurrences threaded in by the auto
-        # dispatcher (r16): (__id, __n, __s) off the probe's materialized
+        # dispatcher: (__id, __n, __s) off the probe's materialized
         # shingle table — identical values to the pipeline below, with
         # the corpus gram build already paid once by the probe
         ex = _ex
     else:
         df = _fan_out(df, id_col)
-        # materialize the shingle table ONCE (r17, same fix as
+        # materialize the shingle table ONCE (same fix as
         # _minhash_bands): the exploded occurrences feed BOTH sides of
         # the co-occurrence self-join, and the former _barrier exchange
         # was duplicated per side at execution (per-branch pushed
@@ -340,8 +342,8 @@ def jaccard_similarity_join_auto(df: DataFrame, text_col: str, id_col: str,
     threaded through as that gate's estimate, so the corpus is scanned
     once for decision + gate; cost ≈ one scan, negligible next to
     either join). NOTE the probe aggregate runs EAGERLY at call time
-    (since r17 the underlying functions also materialize their shingle
-    table eagerly — one tokenize+shingle pass per call is the contract
+    (the underlying functions also materialize their shingle table
+    eagerly — one tokenize+shingle pass per call is the contract
     everywhere; only the probe/gate jobs differ between entry points).
     ``R <= dup_ratio_threshold`` → count-based (wins on near-unique
     corpora where the self-join is output-bounded and prefix ranking
@@ -349,7 +351,7 @@ def jaccard_similarity_join_auto(df: DataFrame, text_col: str, id_col: str,
     shingles inflate Σ df² super-linearly).
 
     Calibration (tools/scale_probe.py on sf0.1 and its ×N-replicated
-    variants; full table in CHANGES_r07.md): R≈4.9 plain → count-based
+    variants): R≈4.9 plain → count-based
     faster (2.1 s vs 3.1 s); R≈10 at 2× → PPJoin edges ahead (7.5 s vs
     8.7 s); R≈15 at 3× → wash; R≈26 at 5× → PPJoin 1.5× (8.8 s vs
     13.4 s); R≈52 at 10× → 1.8×; R≈105 at 20× → 1.5× (89.8 s vs
@@ -363,10 +365,10 @@ def jaccard_similarity_join_auto(df: DataFrame, text_col: str, id_col: str,
     and the decision costs one scan — or pass the strategy explicitly
     via the underlying functions to skip the probe scan entirely."""
     # The probe MATERIALIZES the hashed shingle table and its document-
-    # frequency table (r16 optimization): the dispatcher is eager by
-    # contract (the ratio must be collected to route), and before r16 the
-    # routed branch then re-ran the whole corpus gram pipeline — tokenize,
-    # zip_with gram build, hash — plus the dfreq aggregate from scratch
+    # frequency table: the dispatcher is eager by contract (the ratio
+    # must be collected to route), and without it the routed branch
+    # would re-run the whole corpus gram pipeline — tokenize, zip_with
+    # gram build, hash — plus the dfreq aggregate from scratch
     # (exchange reuse never spans separate executions), so the corpus was
     # effectively scanned twice and shingled 2-3×. localCheckpoint here is
     # the same byte magnitude as the _barrier shuffle files the pipeline
@@ -460,7 +462,7 @@ def jaccard_similarity_join_prefix(df: DataFrame, text_col: str, id_col: str,
     _gate_input = df
     if _sh is not None:
         # materialized (__id, __n, __sh-hashed) + capped dfreq threaded in
-        # by the auto dispatcher (r16) — the corpus gram pipeline already
+        # by the auto dispatcher — the corpus gram pipeline already
         # ran exactly once, in the probe
         sh, dfreq = _sh, _dfreq
         ex = sh.select("__id", "__n", F.explode("__sh").alias("__s"))
@@ -474,11 +476,11 @@ def jaccard_similarity_join_prefix(df: DataFrame, text_col: str, id_col: str,
                                     lambda s: F.xxhash64(s)).alias("__sh"))
                 .withColumn("__n", F.size("__sh"))
                 .select("__id", "__n", "__sh"))
-        # Materialize the shingle table once (r16 for the gated default
+        # Materialize the shingle table once (for the gated default
         # path — the gate's eager estimate job would otherwise re-run
         # the whole tokenize+gram+hash pipeline at action, measured as
-        # ~1.5 s of the 4.3 s warm query at sf0.1; r17 extends it to
-        # the explicit True/False path too: the prefix window, both
+        # ~1.5 s of the 4.3 s warm query at sf0.1; and for the
+        # explicit True/False path too: the prefix window, both
         # verify sides and the dfreq aggregate all consume ``sh``, and
         # a plain _barrier exchange is not reliably shared across those
         # branches — per-branch pushed predicates break canonical
@@ -547,7 +549,7 @@ def jaccard_similarity_join_prefix(df: DataFrame, text_col: str, id_col: str,
                            .alias("p")).collect()[0]["p"]) or 0)
         broadcast_candidates = est <= max_broadcast_candidates
         if not broadcast_candidates:
-            # Tier 3 (r12): the tier-2 bound counts every same-shingle
+            # Tier 3: the tier-2 bound counts every same-shingle
             # pair BEFORE prefix/size/positional filtering and can
             # overshoot the real candidate count by 50x on exactly the
             # duplicate-heavy corpora this join is recommended for
@@ -593,7 +595,7 @@ def decontaminate(corpus: DataFrame, benchmark: DataFrame, text_col: str,
     b_sh = (benchmark
             .select(F.explode(shingles_col(text_col, n)).alias("__s0"))
             .select(F.xxhash64("__s0").alias("__s")).distinct())
-    # materialize the corpus shingle table ONCE (r17, same fix as
+    # materialize the corpus shingle table ONCE (same fix as
     # _minhash_bands): the hit-count explode and the final per-doc
     # (id, n) join both consume it, and the former _barrier exchange
     # was duplicated per branch at execution (per-branch pushed
@@ -702,9 +704,9 @@ def simhash_neardup_pairs(df: DataFrame, text_col: str, id_col: str,
     # bound: ones ≤ n ≤ 65535 distinct tokens per doc (docs are chunked
     # far below this; lane sum peaks < 2^49, no overflow).
     # The bit expressions are rendered as SQL STRINGS parsed JVM-side in
-    # a handful of F.expr calls (r16; the vector_knn r4 lesson): the
-    # former per-bit Column arithmetic issued thousands of Py4J round
-    # trips and cost ~1.5 s of DRIVER time per plan construction.
+    # a handful of F.expr calls: per-bit Column arithmetic issued
+    # thousands of Py4J round trips and cost ~1.5 s of DRIVER time per
+    # plan construction.
     # Expression semantics are unchanged operator-for-operator
     # (shiftleft/shiftright/&/CASE), so the signatures are bit-identical.
     lanes, groups = 3, 20
@@ -720,7 +722,7 @@ def simhash_neardup_pairs(df: DataFrame, text_col: str, id_col: str,
             f"BIGINT), {b}) ELSE CAST(0 AS BIGINT) END)"
             for b in range(bits_n)]
     sig = F.expr(" | ".join(bits))
-    # materialize the (id, signature) table ONCE (r17, same fix as
+    # materialize the (id, signature) table ONCE (same fix as
     # _minhash_bands): the pigeonhole blocks read it n_chunks times on
     # EACH side of the self-join, and the former _barrier exchange was
     # not reliably shared across those branches (per-branch pushed
@@ -985,21 +987,22 @@ def hyperplane_lsh_neardup(df: DataFrame, vector_col: str, id_col: str,
     0.6s here on sf0.1). Per-task memory is (bucket size)² doubles;
     ``num_planes`` governs bucket granularity (2^planes buckets), the same
     knob/memory contract as ``num_blocks`` in cosine_threshold_pairs."""
-    import numpy as np
-    import pandas as pd
-
     planes = lsh_planes(dim, num_planes, seed)
+    weights = np.left_shift(1, np.arange(num_planes, dtype=np.int64))
 
-    from pydata_vector_search_spark.functions.vector import dot_product_lit
-    sig = None
-    for i in range(num_planes):
-        bit = F.when(dot_product_lit(vector_col,
-                                     [float(v) for v in planes[i]]) > 0,
-                     F.shiftleft(F.lit(1).cast("long"), i)) \
-               .otherwise(F.lit(0).cast("long"))
-        sig = bit if sig is None else sig.bitwiseOR(bit)
+    @F.pandas_udf("long")
+    def _signature(vs: pd.Series) -> pd.Series:
+        # bit i set when the dot with plane i is > 0; a NULL vector has
+        # no bits set
+        valid = vs.notna().to_numpy()
+        sig = np.zeros(len(vs), dtype=np.int64)
+        sig[valid] = ((_matrix(vs.to_numpy()[valid], dim) @ planes.T) > 0) \
+            @ weights
+        return pd.Series(sig)
+
     base = df.select(F.col(id_col).alias("__id"),
-                     F.col(vector_col).alias("__v"), sig.alias("__sig"))
+                     F.col(vector_col).alias("__v"),
+                     _signature(F.col(vector_col)).alias("__sig"))
 
     id_type = df.schema[id_col].dataType.simpleString()
     out_schema = f"id_1 {id_type}, id_2 {id_type}, cos_sim double"

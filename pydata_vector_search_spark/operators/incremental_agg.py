@@ -104,9 +104,8 @@ def refresh_agg(catalog, source: str, name: str) -> dict:
     mins, maxs = meta.get("mins") or {}, meta.get("maxs") or {}
     key = info.key
 
-    # materialize the changed-key set ONCE (r17, the jaccard-dispatcher
-    # threading pattern): it anchors BOTH the old-image and new-image
-    # joins, and without the barrier the commit-log scan + distinct
+    # materialize the changed-key set ONCE: it anchors BOTH the old-image
+    # and new-image joins, and without the barrier the commit-log scan + distinct
     # subtree is planned twice — runtime stage reuse across the two
     # broadcast sides is AQE's call, not a guarantee. The key set is
     # bounded by the changed data (tiny next to either image); one
@@ -135,9 +134,7 @@ def refresh_agg(catalog, source: str, name: str) -> dict:
         scoped = catalog.load(source).join(g2, cond, "left_semi")
         fresh = _aggregate(scoped, gb, sums, cnt, mins, maxs)
         untouched = catalog.load(name).join(g2, cond, "left_anti")
-        applied = (untouched.unionByName(fresh)
-                   .localCheckpoint(eager=True))
-        catalog.write(name, applied)
+        catalog.write(name, untouched.unionByName(fresh))
         meta["commit"] = n
         catalog._persist()
         return {"refreshed": True, "from": r, "to": n}
@@ -179,8 +176,9 @@ def refresh_agg(catalog, source: str, name: str) -> dict:
                      + F.coalesce(F.col(f"__d_{x}"), F.lit(0))).alias(x)
                     for x in (cnt, *sums)])
                 .filter(F.col(cnt) > 0)
-                .withColumn(cnt, F.col(cnt).cast("long"))
-                .localCheckpoint(eager=True))   # overwriting the read path
+                .withColumn(cnt, F.col(cnt).cast("long")))
+    # catalog.write lands in a fresh version, so ``applied`` may read the
+    # rollup it replaces
     catalog.write(name, applied)
     meta["commit"] = n
     catalog._persist()

@@ -27,7 +27,6 @@ from pyspark.sql import Column, DataFrame, functions as F
 
 from pydata_vector_search_spark.functions.vector import (
     distance_expr,
-    distance_expr_dim,
     distance_expr_lit,
 )
 
@@ -52,17 +51,16 @@ def vector_search(df: DataFrame,
     if filter is not None:
         df = df.filter(filter)  # pre-filter: Catalyst pushes this into the scan
     if isinstance(query_vec, Column):
-        # dimension unknown at plan time → HOF (interpreted) reference form
+        # a Column query is known only per row → HOF expression fold
         dist = distance_expr(metric, F.col(vector_col), query_vec)
     else:
-        # literal query vector → unrolled scalar expressions, whole-stage
-        # codegen end-to-end (~20× the HOF scan; see functions/vector)
-        dist = distance_expr_lit(metric, vector_col,
-                                 [float(v) for v in query_vec])
+        # a constant query → the Arrow kernel, one matmul per batch
+        dist = distance_expr_lit(metric, vector_col, query_vec)
     if round_to is not None:
         dist = F.round(dist, round_to)
     out = df.withColumn(distance_col, dist)
-    order = [F.col(distance_col).asc()]
+    # NULL distances (NULL or zero-norm vectors) rank last, never first
+    order = [F.col(distance_col).asc_nulls_last()]
     if tiebreaker:
         order.append(F.col(tiebreaker).asc())
     return out.orderBy(*order).limit(k)  # → TakeOrderedAndProject
@@ -86,7 +84,7 @@ def hybrid_search_postfilter(df: DataFrame,
     wide = vector_search(df, vector_col, query_vec, k=fetch_k, metric=metric,
                          distance_col=distance_col, tiebreaker=tiebreaker,
                          round_to=round_to)
-    order = [F.col(distance_col).asc()]
+    order = [F.col(distance_col).asc_nulls_last()]
     if tiebreaker:
         order.append(F.col(tiebreaker).asc())
     return wide.filter(filter).orderBy(*order).limit(k)
@@ -106,18 +104,14 @@ def knn_join(left: DataFrame, right: DataFrame, vector_col: str,
     partitioned — Spark plans BroadcastNestedLoopJoin; each executor scores
     its corpus slice against the in-memory query block, and the window
     row_number ≤ k is a partial top-k per query. Pair scoring is the
-    Arrow-batched numpy distance (functions/vector.distance_arrow): on the
-    |Q|·|corpus| pair stream it beats both the interpreted HOF (~30×) and
-    the unrolled scalar form (whose hundred-term methods cost 1.5-2s of
-    Janino per stage at dim=64). ``dim`` kept for signature compatibility.
+    Arrow-batched numpy distance (functions/vector.distance_arrow). ``dim``
+    is unused and kept for signature compatibility.
 
     This is the EXACT/oracle form: cost is O(|left|·|right|) pairs. The
     ``max_pairs`` safety valve refuses plans above the cap and points at
     the sub-linear IVF probe join (ann.ivf_knn_join); pass
-    ``max_pairs=None`` to force a known-large exact run. The default cap
-    (100M pairs) was introduced in round 4 — a BREAKING default for
-    previously-working large exact joins, which now must opt in with
-    ``max_pairs=None`` (see CHANGES_r04/r05).
+    ``max_pairs=None`` to force a known-large exact run (the default cap
+    is 100M pairs).
 
     Guard cost: BOUNDED counts, not full ones. Each side is counted
     through ``limit(bound).count()`` — Spark's CollectLimit runs an
@@ -157,8 +151,8 @@ def knn_join(left: DataFrame, right: DataFrame, vector_col: str,
     if round_to is not None:    # round BEFORE the rank for cross-engine ties
         dist = F.round(dist, round_to)
     joined = F.broadcast(l).crossJoin(r).withColumn(distance_col, dist)
-    w = Window.partitionBy(left_id).orderBy(F.col(distance_col).asc(),
-                                            F.col(right_id).asc())
+    w = Window.partitionBy(left_id).orderBy(
+        F.col(distance_col).asc_nulls_last(), F.col(right_id).asc())
     return (joined.withColumn("__rn", F.row_number().over(w))
                   .filter(F.col("__rn") <= k)
                   .drop("__rn", lv, rv))

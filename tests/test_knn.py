@@ -94,3 +94,20 @@ def test_knn_join_max_pairs_guard(emb, spark):
     empty = corpus.filter(F.lit(False))
     assert knn.knn_join(queries, empty, "embedding", k=1,
                         max_pairs=1).count() == 0
+
+
+def test_null_vectors_rank_last(spark):
+    """A NULL vector has no distance and ranks after every scored row —
+    under ``asc()`` (NULLS FIRST) it ranked first."""
+    df = spark.createDataFrame([(1, [1.0, 0.0]), (2, [0.0, 1.0]), (3, None)],
+                               "id long, v array<float>")
+    for fn in (
+        lambda: knn.vector_search(df, "v", [1.0, 0.0], k=3),
+        lambda: knn.hybrid_search_postfilter(df, "v", [1.0, 0.0],
+                                             filter=F.col("id") > 0, k=3,
+                                             fetch_k=3),
+    ):
+        got = [(r.id, r._distance) for r in fn().collect()]
+        assert got == [(1, 0.0), (2, 1.0), (3, None)]
+    assert [r.id for r in knn.vector_search(
+        df, "v", [1.0, 0.0], k=2).collect()] == [1, 2]

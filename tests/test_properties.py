@@ -45,6 +45,77 @@ def test_vector_exprs_match_numpy(spark, ab):
     assert row.cos == pytest.approx(expected_cos, rel=1e-9, abs=1e-9)
 
 
+# Components are multiples of 1/4 in [-2, 2]: every dot product and sum of
+# squares is exact in float64 whatever the summation order, so the kernel
+# and the reference below compute bit-identical distances and the top-k,
+# ties included, can be compared exactly.
+_quarter = st.integers(min_value=-8, max_value=8).map(lambda i: i / 4)
+
+
+@st.composite
+def knn_case(draw):
+    dim = draw(st.integers(min_value=1, max_value=6))
+    vec = st.lists(_quarter, min_size=dim, max_size=dim)
+    rows = draw(st.lists(st.one_of(st.none(), vec), min_size=1, max_size=12))
+    return (rows, draw(vec), draw(st.sampled_from(["cosine", "l2", "dot"])),
+            draw(st.integers(min_value=1, max_value=len(rows))),
+            draw(st.one_of(st.none(), st.integers(min_value=0, max_value=3))),
+            draw(st.booleans()))
+
+
+def _ref_distance(metric, a, q):
+    """numpy float64 reference for one row, in the kernel's formula order."""
+    if a is None:
+        return None
+    a, q = np.asarray(a, np.float64), np.asarray(q, np.float64)
+    if metric == "l2":
+        return float(np.sqrt(((a - q) ** 2).sum()))
+    dot = float(a @ q)
+    if metric == "dot":
+        return -dot
+    norms = float(np.linalg.norm(a) * np.linalg.norm(q))
+    return None if norms == 0 else 1.0 - dot / norms
+
+
+def _spark_round(d, r):
+    """Spark's ROUND on a double: HALF_UP on its decimal representation."""
+    from decimal import ROUND_HALF_UP, Decimal
+    return float(Decimal(repr(d)).quantize(Decimal(1).scaleb(-r),
+                                           rounding=ROUND_HALF_UP))
+
+
+@settings(max_examples=30, deadline=None)
+@given(knn_case())
+def test_exact_topk_matches_numpy_reference(spark, case):
+    """Exact top-k through the Arrow kernel equals a float64 reference:
+    NULL and zero-norm cosine rows rank last with a NULL distance, ties
+    break on the key when a tiebreaker is given, and ``round_to`` rounds
+    before the ordering."""
+    rows, q, metric, k, round_to, tie = case
+    df = spark.createDataFrame(list(enumerate(rows)), "id long, v array<double>")
+    if metric == "cosine" and not any(q):
+        with pytest.raises(ValueError, match="zero-norm"):
+            knn.vector_search(df, "v", q, metric=metric)
+        return
+    got = knn.vector_search(df, "v", q, k=k, metric=metric,
+                            tiebreaker="id" if tie else None,
+                            round_to=round_to).collect()
+
+    ref = {}
+    for i, a in enumerate(rows):
+        d = _ref_distance(metric, a, q)
+        ref[i] = d if d is None or round_to is None else _spark_round(d, round_to)
+    order = sorted(ref, key=lambda i: (ref[i] is None, ref[i] or 0.0, i))
+    want = [(i, ref[i]) for i in order[:k]]
+    got = [(r.id, r._distance) for r in got]
+    if tie:
+        assert got == want
+    else:   # without a tiebreaker, rows tied at the cut are interchangeable
+        assert [d for _, d in got] == [d for _, d in want]
+        assert all(ref[i] == d for i, d in got)
+        assert len({i for i, _ in got}) == k
+
+
 @settings(max_examples=15, deadline=None)
 @given(st.text(alphabet=st.characters(codec="ascii", min_codepoint=32,
                                       max_codepoint=126),

@@ -118,9 +118,10 @@ def test_tvf_hudi_alias_and_path_resolution(spark, sf_dir):
     got = sql_with_tvf(spark, f"""
         SELECT vec_id, round(1 - _distance, 2) AS score
         FROM hudi_vector_search('{path}', 'embedding',
-            array(1.0, 0.0), 3, 'l2', 'vec_id')
+            (SELECT embedding FROM parquet.`{path}` WHERE vec_id = 0),
+            3, 'l2', 'vec_id')
     """).collect()
-    assert len(got) == 3
+    assert len(got) == 3 and got[0].vec_id == 0
 
 
 def test_tvf_arg_validation(spark):

@@ -72,86 +72,82 @@ def test_embed_text_mllib_tfidf(spark, sf_dir):
     assert len(hits) == 3 and hits[0]._distance < 1e-6
 
 
-def test_unrolled_forms_agree_with_hof(spark, sf_dir):
-    """The codegen-path (unrolled) distance forms agree with the HOF
-    reference fold to float tolerance on real fixture vectors, for every
-    metric, in both literal-query and column-column spellings."""
-    import math
-
-    from pyspark.sql import functions as F
-
+def test_kernel_agrees_with_hof(spark, sf_dir):
+    """The Arrow kernels agree with the HOF reference fold to float
+    tolerance on real fixture vectors, for every metric: the constant-query
+    kernel against a literal query, the column kernel column against
+    column."""
     from pydata_vector_search_spark.catalog import read_table
     from pydata_vector_search_spark.functions import vector as V
 
     emb = read_table(spark, sf_dir, "embeddings").limit(50)
     q = [float(x) for x in emb.filter("vec_id = 0").head().embedding]
-    dim = len(q)
     ql = V.query_vector_lit(q)
+    rev = F.reverse("embedding")
 
-    rows = emb.select(
-        "vec_id",
-        V.cosine_distance("embedding", ql).alias("cos_hof"),
-        V.cosine_distance_lit("embedding", q).alias("cos_lit"),
-        V.l2_distance("embedding", ql).alias("l2_hof"),
-        V.l2_distance_lit("embedding", q).alias("l2_lit"),
-        V.dot_product("embedding", ql).alias("dot_hof"),
-        V.dot_product_lit("embedding", q).alias("dot_lit"),
-        V.cosine_similarity("embedding", F.col("embedding")).alias("css_hof"),
-        V.cosine_similarity_dim("embedding", F.col("embedding"), dim).alias("css_dim"),
-        V.l2_distance("embedding", F.col("embedding")).alias("l2c_hof"),
-        V.l2_distance_dim("embedding", F.col("embedding"), dim).alias("l2c_dim"),
-        V.dot_product("embedding", F.col("embedding")).alias("dpc_hof"),
-        V.dot_product_dim("embedding", F.col("embedding"), dim).alias("dpc_dim"),
-    ).collect()
+    cols = ["vec_id"]
+    for m in ("cosine", "l2", "dot"):
+        cols += [V.distance_expr(m, "embedding", ql).alias(f"{m}_hof"),
+                 V.distance_expr_lit(m, "embedding", q).alias(f"{m}_lit"),
+                 V.distance_expr(m, "embedding", rev).alias(f"{m}_chof"),
+                 V.distance_arrow(m, "embedding", rev).alias(f"{m}_arrow")]
+    rows = emb.select(*cols).collect()
     assert len(rows) == 50
     for r in rows:
-        assert math.isclose(r.cos_hof, r.cos_lit, rel_tol=1e-12, abs_tol=1e-12)
-        assert math.isclose(r.l2_hof, r.l2_lit, rel_tol=1e-12, abs_tol=1e-12)
-        assert math.isclose(r.dot_hof, r.dot_lit, rel_tol=1e-12, abs_tol=1e-12)
-        assert math.isclose(r.css_hof, r.css_dim, rel_tol=1e-12, abs_tol=1e-12)
-        assert math.isclose(r.l2c_hof, r.l2c_dim, rel_tol=1e-12, abs_tol=1e-12)
-        assert math.isclose(r.dpc_hof, r.dpc_dim, rel_tol=1e-12, abs_tol=1e-12)
+        for m in ("cosine", "l2", "dot"):
+            assert math.isclose(r[f"{m}_hof"], r[f"{m}_lit"],
+                                rel_tol=1e-12, abs_tol=1e-12)
+            assert math.isclose(r[f"{m}_chof"], r[f"{m}_arrow"],
+                                rel_tol=1e-12, abs_tol=1e-12)
 
 
 def test_distance_expr_lit_unknown_metric(spark):
-    import pytest as _pytest
-
     from pydata_vector_search_spark.functions.vector import (
-        distance_expr_dim, distance_expr_lit)
-    with _pytest.raises(ValueError, match="unknown metric"):
+        distance_arrow, distance_expr_lit)
+    with pytest.raises(ValueError, match="unknown metric"):
         distance_expr_lit("chebyshev", "v", [1.0])
-    with _pytest.raises(ValueError, match="unknown metric"):
-        distance_expr_dim("chebyshev", "a", "b", 4)
+    with pytest.raises(ValueError, match="unknown metric"):
+        distance_arrow("chebyshev", "a", "b")
 
 
-def test_sql_text_path_bit_identical_to_column_tree(spark, sf_dir):
-    """The F.expr SQL-string spelling of the unrolled forms must produce
-    BIT-identical doubles to the Column-operator tree (same nodes after
-    parse) — the string path exists only to skip ~1.5s of Py4J plan-build
-    at dim=64, never to change results."""
-    from pyspark.sql import functions as F
+@pytest.mark.parametrize("metric,q,match", [
+    ("l2", [], "non-empty"),
+    ("dot", [1.0, float("nan")], "non-finite"),
+    ("l2", [float("inf"), 0.0], "non-finite"),
+    ("cosine", [0.0, 0.0], "zero-norm"),
+])
+def test_kernel_rejects_bad_query_on_driver(spark, metric, q, match):
+    """A bad query vector fails while the plan is built, before any job."""
+    from pydata_vector_search_spark.functions.vector import distance_expr_lit
+    with pytest.raises(ValueError, match=match):
+        distance_expr_lit(metric, "v", q)
 
-    from pydata_vector_search_spark.catalog import read_table
-    from pydata_vector_search_spark.functions import vector as V
-    emb = read_table(spark, sf_dir, "embeddings").limit(50)
-    q = [float(x) for x in emb.select("embedding").head()[0]]
 
-    pairs = [
-        (V.cosine_distance_lit("embedding", q),
-         V.cosine_distance_lit(F.col("embedding"), q)),
-        (V.cosine_similarity_lit("embedding", q),
-         V.cosine_similarity_lit(F.col("embedding"), q)),
-        (V.l2_distance_lit("embedding", q),
-         V.l2_distance_lit(F.col("embedding"), q)),
-        (V.dot_product_lit("embedding", q),
-         V.dot_product_lit(F.col("embedding"), q)),
-    ]
-    cols = []
-    for i, (s, c) in enumerate(pairs):
-        cols += [s.alias(f"s{i}"), c.alias(f"c{i}")]
-    for r in emb.select(*cols).collect():
-        for i in range(len(pairs)):
-            assert r[f"s{i}"] == r[f"c{i}"]   # exact, unrounded equality
+def test_kernel_null_and_zero_norm_rows_are_null(spark):
+    """NULL vectors, and zero-norm vectors under cosine, have no distance;
+    a zero query is fine for l2 and dot."""
+    from pydata_vector_search_spark.functions.vector import (
+        distance_arrow, distance_expr_lit)
+    df = spark.createDataFrame(
+        [(1, [3.0, 4.0]), (2, None), (3, [0.0, 0.0])],
+        "id int, v array<float>")
+    got = {r.id: (r.cos, r.l2, r.dot, r.arrow) for r in df.select(
+        "id", distance_expr_lit("cosine", "v", [1.0, 0.0]).alias("cos"),
+        distance_expr_lit("l2", "v", [0.0, 0.0]).alias("l2"),
+        distance_expr_lit("dot", "v", [1.0, 0.0]).alias("dot"),
+        distance_arrow("cosine", "v", F.array(F.lit(1.0), F.lit(0.0)))
+        .alias("arrow")).collect()}
+    assert got[1] == (pytest.approx(0.4), 5.0, -3.0, pytest.approx(0.4))
+    assert got[2] == (None, None, None, None)
+    assert got[3] == (None, 0.0, 0.0, None)
+
+
+def test_kernel_wrong_length_row_names_both_lengths(spark):
+    from pydata_vector_search_spark.functions.vector import distance_expr_lit
+    for v in ([1.0], [1.0, 2.0, 3.0]):
+        df = spark.createDataFrame([(v,)], "v array<double>")
+        with pytest.raises(Exception, match=f"length {len(v)} .*length 2"):
+            df.select(distance_expr_lit("l2", "v", [1.0, 2.0])).collect()
 
 
 def test_sentence_transformer_encoder_real_model(spark):

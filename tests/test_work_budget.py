@@ -50,6 +50,31 @@ def index(emb, tmp_path_factory):
                          num_centroids=8, seed=42)
 
 
+def _compiles(spark) -> int:
+    """Janino compiles so far in this JVM."""
+    return (spark.sparkContext._jvm.org.apache.spark.metrics.source
+            .CodegenMetrics.METRIC_COMPILATION_TIME().getCount())
+
+
+def test_exact_search_is_query_independent(spark, emb, query):
+    """After one warm exact search, a search with a different query vector
+    generates no new code (the query lives in the distance kernel's
+    closure, not in the plan's expressions) and is one job: the
+    TakeOrderedAndProject collect."""
+    from pydata_vector_search_spark.operators import knn
+
+    def search(q):
+        return lambda: knn.vector_search(emb, "embedding", q, k=10,
+                                         tiebreaker="vec_id",
+                                         round_to=4).collect()
+
+    _jobs(spark, search(query))
+    c0 = _compiles(spark)
+    n = _jobs(spark, search([x + 0.5 for x in query]))
+    assert _compiles(spark) == c0
+    assert n == 1
+
+
 def test_ivf_search_is_one_job(spark, index, query):
     """No listing job, no footer job: the probe scan is the only job."""
     n = _jobs(spark, lambda: ann.ivf_search(

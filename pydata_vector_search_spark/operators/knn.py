@@ -11,10 +11,11 @@ Reference behavior being re-expressed (SURVEY.md §2.2):
   pre-filter hybrid search, the headline improvement (SURVEY.md §4 O1).
 
 Physical shape (verified via .explain in tests): columnar Parquet scan (with
-the filter pushed into the scan) → per-partition top-k → driver merge, i.e.
-Catalyst's ``TakeOrderedAndProject``. No global sort, no shuffle: at 100 TB /
-1000 executors each task keeps a k-row heap and ships k rows to the driver,
-so cost is scan-bound and embarrassingly parallel. The ANN path (operators/
+the filter pushed into the scan) → the Arrow distance kernel per batch →
+per-partition top-k → driver merge, i.e. Catalyst's ``TakeOrderedAndProject``.
+No global sort, no shuffle: at 100 TB / 1000 executors each task keeps a
+k-row heap and ships k rows to the driver, so cost is scan-bound and
+embarrassingly parallel. The ANN path (operators/
 ann.py) prunes the scan itself; this module is the exact mode and the
 correctness oracle for it.
 """

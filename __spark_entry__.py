@@ -690,7 +690,7 @@ def q_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
                              round_to=6, tiebreaker="vec_id")
            .select(F.col("vec_id").alias("doc_id"), "_distance"))
     return rrf_fuse(lex, vec, "doc_id", k0=60, k=10,
-                    b_order=[F.col("_distance").asc(),
+                    b_order=[F.col("_distance").asc_nulls_last(),
                              F.col("doc_id").asc()])
 
 

@@ -433,7 +433,7 @@ class Engine:
                              metric=metric, round_to=6, tiebreaker=id_col)
                .select(id_col, "_distance"))
         return rrf_fuse(lex, vec, id_col, k=k,
-                        b_order=[F.col("_distance").asc(),
+                        b_order=[F.col("_distance").asc_nulls_last(),
                                  F.col(id_col).asc()])
 
     def pq_index(self, table: str | DataFrame, vector_col: str,

@@ -119,15 +119,10 @@ def _distances(metric: str, A: np.ndarray, B: np.ndarray) -> np.ndarray:
         return np.where(norms == 0, np.nan, 1.0 - dots / norms)
 
 
-def distance_expr_lit(metric: str, a: Column | str,
-                      q: Sequence[float]) -> Column:
-    """Distance of every vector in column ``a`` to the constant query ``q``.
-
-    The query is checked on the driver, before any job: an empty query, a
-    non-finite component or (under cosine) a zero norm raises
-    ``ValueError``. A distance that is not a number is NULL: a NULL row, a
-    zero-norm row under cosine, a row with NaN components. A row of another
-    length than ``q`` fails the query with an error naming both lengths."""
+def _query_kernel(metric: str, q: Sequence[float]):
+    """The ``pandas_udf`` behind ``distance_expr_lit``, for a caller that
+    needs the UDF object itself (``pq_search`` marks its copy
+    nondeterministic). Checks ``q`` as ``distance_expr_lit`` does."""
     _check_metric(metric)
     qv = np.asarray(q, dtype=np.float64)
     if qv.ndim != 1 or not qv.size:
@@ -146,12 +141,21 @@ def distance_expr_lit(metric: str, a: Column | str,
         out[valid] = _distances(metric, _matrix(xs.to_numpy()[valid], dim), qv)
         return pd.Series(out)
 
-    # Declared nondeterministic only to keep Catalyst from pushing the
-    # distance projection below an input's LIMIT: between that limit and
-    # its ORDER BY, the extracted Python UDF would split the input's
-    # TakeOrderedAndProject into a global range sort (a PQ shortlist's
-    # re-rank went from 1 Spark job to 4).
-    return _d.asNondeterministic()(_c(a))
+    return _d
+
+
+def distance_expr_lit(metric: str, a: Column | str,
+                      q: Sequence[float]) -> Column:
+    """Distance of every vector in column ``a`` to the constant query ``q``.
+
+    The query is checked on the driver, before any job: an empty query, a
+    non-finite component or (under cosine) a zero norm raises
+    ``ValueError``. A distance that is not a number is NULL: a NULL row, a
+    zero-norm row under cosine, a row with NaN components. A row of another
+    length than ``q`` fails the query with an error naming both lengths.
+    The column is deterministic, so Catalyst still pushes a later filter
+    below it and into the scan."""
+    return _query_kernel(metric, q)(_c(a))
 
 
 def distance_arrow(metric: str, a: Column | str, b: Column | str) -> Column:

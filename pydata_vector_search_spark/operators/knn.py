@@ -57,6 +57,13 @@ def vector_search(df: DataFrame,
     else:
         # a constant query → the Arrow kernel, one matmul per batch
         dist = distance_expr_lit(metric, vector_col, query_vec)
+    return _top_k(df, dist, k, distance_col, tiebreaker, round_to)
+
+
+def _top_k(df: DataFrame, dist: Column, k: int, distance_col: str,
+           tiebreaker: str | None, round_to: int | None) -> DataFrame:
+    """The ``k`` rows of ``df`` with the smallest ``dist``, as
+    ``vector_search`` returns them."""
     if round_to is not None:
         dist = F.round(dist, round_to)
     out = df.withColumn(distance_col, dist)

@@ -158,7 +158,8 @@ def pq_search(df: DataFrame, vector_col: str, code_col: str,
     ``shortlist`` survive (TakeOrderedAndProject), and those few rows
     get the exact distance in ``metric`` (default: the codebooks'). The
     returned columns/ordering contract matches ``knn.vector_search``."""
-    from pydata_vector_search_spark.operators.knn import vector_search
+    from pydata_vector_search_spark.functions.vector import _query_kernel
+    from pydata_vector_search_spark.operators.knn import _top_k
 
     approx = df.withColumn("__adc", pq_adc_distance(code_col, cb,
                                                     query_vec))
@@ -166,10 +167,13 @@ def pq_search(df: DataFrame, vector_col: str, code_col: str,
     if tiebreaker:
         order.append(F.col(tiebreaker).asc())
     short = approx.orderBy(*order).limit(shortlist).drop("__adc")
-    return vector_search(short, vector_col, query_vec, k=k,
-                         metric=metric or cb.metric,
-                         distance_col=distance_col,
-                         tiebreaker=tiebreaker, round_to=round_to)
+    # Nondeterministic only to keep Catalyst from pushing the distance
+    # projection below the shortlist's LIMIT: between that limit and its
+    # ORDER BY, the extracted Python UDF would split the shortlist's
+    # TakeOrderedAndProject into a global range sort (4 Spark jobs, not 1).
+    kernel = _query_kernel(metric or cb.metric, query_vec).asNondeterministic()
+    return _top_k(short, kernel(F.col(vector_col)), k, distance_col,
+                  tiebreaker, round_to)
 
 
 def ivfpq_search(spark, index, cb: PQCodebooks,

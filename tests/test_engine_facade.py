@@ -160,6 +160,18 @@ def test_engine_retrieval_and_gates(spark, tmp_path):
     assert rows[0].doc_id in (1, 3)          # in both rank lists
     assert {r.doc_id for r in rows} == {1, 2, 3}
 
+    # a NULL or (under cosine) zero-norm vector has no distance: it takes
+    # the last vector ranks, never the first
+    eng.ingest(spark.createDataFrame(
+        [(1, "vector", [1.0, 0.0]), (2, "hash", [0.0, 1.0]),
+         (3, "join", None), (4, "stream", [0.0, 0.0])],
+        "doc_id int, text string, embedding array<double>"), "nulls",
+        key="doc_id")
+    ranks = {r.doc_id: r.rank_vec for r in eng.hybrid_search_rrf(
+        "nulls", "text", "doc_id", "embedding", ("absent",), [1.0, 0.0],
+        k=4, fetch_k=4).collect()}
+    assert ranks[1] == 1 and ranks[2] == 2 and {ranks[3], ranks[4]} == {3, 4}
+
     kept = eng.semantic_dedup("docs", "embedding", "doc_id", dim=2,
                               threshold=0.99, num_planes=1)
     assert sorted(r.doc_id for r in kept.collect()) == [1, 2]

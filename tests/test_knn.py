@@ -64,6 +64,24 @@ def test_plan_is_take_ordered(emb, qvec):
     assert "TakeOrderedAndProject" in plan
 
 
+def test_filters_push_into_the_scan_past_the_distance(spark, emb, qvec,
+                                                      tmp_path):
+    """The distance column is deterministic, so a filter reaches the
+    parquet scan whether ``vector_search`` applies it or a caller filters
+    after adding the distance."""
+    from pydata_vector_search_spark.functions.vector import distance_expr_lit
+    emb.write.parquet(str(tmp_path / "emb"))
+    raw = spark.read.parquet(str(tmp_path / "emb"))  # not the cached frame
+    for df in (
+        knn.vector_search(raw, "embedding", qvec, k=5,
+                          filter=F.col("label") == 3),
+        raw.withColumn("d", distance_expr_lit("cosine", "embedding", qvec))
+           .filter(F.col("label") == 3),
+    ):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "EqualTo(label,3)" in plan, plan
+
+
 def test_knn_join_shapes(emb, qvec, spark):
     queries = emb.filter(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("left_id"), "embedding")

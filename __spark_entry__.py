@@ -250,7 +250,7 @@ def q_vector_knn_tvf(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM vector_search('embeddings', 'embedding',
                            (SELECT embedding FROM embeddings WHERE vec_id = 0),
                            10, 'cosine', 'vec_id', 2)
-        ORDER BY _distance ASC, vec_id ASC
+        ORDER BY _distance ASC NULLS LAST, vec_id ASC
     """)
 
 
@@ -263,7 +263,7 @@ def q_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
                     .select(F.col("vec_id").alias("left_id"), "embedding")
     corpus = emb.select(F.col("vec_id").alias("right_id"), "embedding")
     return (knn.knn_join(queries_df, corpus, "embedding", k=3,
-                         round_to=6, dim=len(_query_vec(spark, sf_dir)))
+                         round_to=6)
                .select("left_id", "right_id",
                        F.col("_distance").alias("dist"))
                .orderBy("left_id", "right_id"))
@@ -2007,16 +2007,18 @@ def q_stream_index_patch(spark: SparkSession, sf_dir: str) -> DataFrame:
     same table as TWO micro-batches (maxFilesPerTrigger=1 over two
     source files → two upsert commits, runtime-asserted), advancing it
     past the pinned commit. The next search REFUSES (StaleIndexError —
-    asserted), and ``on_stale='patch'`` repairs the index incrementally
-    from the commit log the stream wrote (a MULTI-commit
-    ``read_incremental`` — cross-commit last-write-wins — feeding
-    ``ivf_patch``: pruned partition rewrite + append under the
-    EXISTING centroids — work ∝ changed keys, never a rebuild scan).
-    Probed at nprobe=all so the served
-    top-k equals exact KNN over the POST-STREAM state; the oracle
+    asserted), and ``on_stale='patch'`` answers from the commit log the
+    stream wrote (a MULTI-commit ``read_incremental`` — cross-commit
+    last-write-wins): by merge-on-read — the changed keys anti-joined
+    out of the probe, their live rows assigned to the EXISTING
+    centroids and unioned in, nothing written — or, once the table is
+    ``ann.COMPACT_COMMITS`` commits past the index (or the changed keys
+    pass half of the key guard), by first compacting them into the index (``ivf_patch``). Either way work ∝
+    changed keys, never a rebuild scan. Probed at nprobe=all so the
+    served top-k equals exact KNN over the POST-STREAM state; the oracle
     replays the streamed mutation as a CASE (label AND negated vector)
-    over the base table — hash equality proves the patched index
-    serves every streamed change, including moved vectors."""
+    over the base table — hash equality proves the read serves every
+    streamed change, including moved vectors."""
     import tempfile
     import uuid as _uuid
 

@@ -24,6 +24,7 @@ from functools import reduce
 from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql.types import BooleanType, IntegerType, StructType
 
 
 @dataclass
@@ -42,6 +43,7 @@ class TableInfo:
     indexes: dict = field(default_factory=dict)   # vector_col -> {path, commit}
     aggregates: dict = field(default_factory=dict)  # agg table -> {group_by, sums, count_col, commit}
     log_gen: int = 0                  # change-log generation (history rewrites start a new one)
+    log_schema: str | None = None     # JSON: union of the logged batches' columns (None: not recorded)
 
 
 def _partition_pred(partition_by: list[str], parts: list[tuple]):
@@ -115,6 +117,24 @@ def _without(snap: DataFrame, doomed: DataFrame, keep_cond,
                doomed.select(*partition_by).distinct().collect()]
     return (snap.filter(_partition_pred(partition_by, touched))
                 .filter(keep_cond), snap, touched)
+
+
+_LOG_COLUMNS = (StructType().add("_deleted", BooleanType())
+                            .add("commit", IntegerType()))
+
+
+def _with_columns(recorded: str | None, schema: StructType) -> str | None:
+    """The recorded log schema (JSON) with the columns of ``schema`` it
+    lacks appended — the log's columns are the union of every logged
+    batch's, as a ``mergeSchema`` read would find them. None (a log
+    written before its schema was recorded) stays None."""
+    if recorded is None:
+        return None
+    out = StructType.fromJson(json.loads(recorded))
+    for f in schema.fields:
+        if f.name not in out.names:
+            out.add(f)
+    return out.json()
 
 
 class Catalog:
@@ -283,6 +303,7 @@ class Catalog:
         if reset_history:         # the new log starts empty
             shutil.rmtree(self._changes_root(name, info.log_gen),
                           ignore_errors=True)
+            info.log_schema = StructType().json()
         if reset_history and key is not None:
             # Record the bootstrap as commit 1 so the change log is a
             # COMPLETE history and ``read_asof`` can reconstruct any
@@ -308,10 +329,16 @@ class Catalog:
                     if f.endswith(".parquet"):
                         os.link(os.path.join(info.path, f),
                                 os.path.join(boot, f))
+                logged = [df.schema]
+                if mode == "append" and prior:      # its files linked too
+                    logged.append(self.load(name).schema)
             else:
-                (self.spark.read.parquet(info.path)
-                     .withColumn("_deleted", F.lit(False))
-                     .write.mode("overwrite").parquet(boot))
+                copy = (self.spark.read.parquet(info.path)
+                            .withColumn("_deleted", F.lit(False)))
+                copy.write.mode("overwrite").parquet(boot)
+                logged = [copy.schema]
+            for schema in logged:
+                info.log_schema = _with_columns(info.log_schema, schema)
             info.commit_times["1"] = time.time()
         return self._commit(info, garbage)
 
@@ -381,6 +408,7 @@ class Catalog:
         for batch, op in changes:
             new.last_commit = self.log_commit(name, batch, op,
                                               commit=new.last_commit + 1)
+            new.log_schema = _with_columns(new.log_schema, batch.schema)
             # wall-clock instant of the commit (the Hudi-timeline
             # timestamp), enabling read_asof_timestamp; stored as
             # JSON-string keys
@@ -393,11 +421,19 @@ class Catalog:
 
     def _log(self, name: str) -> DataFrame:
         """The committed log (commits up to ``last_commit``), ``_deleted``
-        non-NULL. mergeSchema: the log mixes pre-``_deleted`` files (and
-        the hardlinked bootstrap) with current ones; without it the schema
-        is picked from one footer and the tombstone column can vanish."""
-        df = (self.spark.read.option("mergeSchema", "true")
-              .parquet(self._changes_root(name))
+        non-NULL. Read with the schema recorded as commits were logged
+        (``TableInfo.log_schema``), so Spark infers nothing — a
+        ``mergeSchema`` read is a footer-merge job over every log file,
+        growing with history; it remains for a log written before the
+        schema was recorded. The log mixes files without ``_deleted``
+        (pre-``_deleted`` commits, the hardlinked bootstrap) with current
+        ones; they read it as NULL, coalesced to false."""
+        recorded = self._tables[name].log_schema
+        reader = (self.spark.read.option("mergeSchema", "true")
+                  if recorded is None else self.spark.read.schema(
+                      StructType.fromJson(json.loads(
+                          _with_columns(recorded, _LOG_COLUMNS)))))
+        df = (reader.parquet(self._changes_root(name))
               .filter(F.col("commit") <= self._tables[name].last_commit))
         if "_deleted" not in df.columns:
             return df.withColumn("_deleted", F.lit(False))
@@ -545,7 +581,12 @@ class Catalog:
         history, and the old generation is deleted only after it. A
         running CDC tail (``streaming.read_changes_stream``) follows the
         old generation's directory and must be restarted afterwards, from
-        the snapshot: the collapsed base is new files under a new root."""
+        the snapshot: the collapsed base is new files under a new root.
+
+        A registered vector index pinned before ``upto`` is first
+        compacted to the current commit (``compact_index``): a stale
+        index is read by merge-on-read, which needs the history back to
+        its commit."""
         info = self._tables[name]
         if upto <= info.history_start:
             return
@@ -553,6 +594,9 @@ class Catalog:
             raise ValueError(
                 f"cannot expire through commit {upto}: table "
                 f"{name!r} is at commit {info.last_commit}")
+        for vcol, entry in list(info.indexes.items()):
+            if info.history_start <= entry["commit"] < upto:
+                self.compact_index(name, vcol)
         base = (self.read_asof(name, upto)
                     .withColumn("_deleted", F.lit(False))
                     .withColumn("commit", F.lit(upto)))
@@ -582,6 +626,19 @@ class Catalog:
                                     "commit": info.last_commit,
                                     "params": dict(params or {})}
         self._persist()
+
+    def compact_index(self, table: str, vector_col: str) -> None:
+        """Fold the table's changes since a registered index's commit into
+        the index (``ann.ivf_patch``: the touched partitions rewritten,
+        centroids kept) and re-register it at the current commit."""
+        from pydata_vector_search_spark.operators.ann import (IVFIndex,
+                                                              ivf_patch)
+        info, entry = self._tables[table], self.index_info(table, vector_col)
+        ivf_patch(self.spark, IVFIndex.load(self.spark, entry["path"]),
+                  self.read_incremental(table, entry["commit"]),
+                  id_col=info.key)
+        self.register_index(table, vector_col, entry["path"],
+                            params=entry.get("params", {}))
 
     def index_info(self, table: str, vector_col: str | None = None) -> dict | None:
         """The registered index entry (+ its ``vector_col`` and a ``stale``

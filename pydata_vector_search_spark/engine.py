@@ -176,21 +176,28 @@ class Engine:
         — the table form enforces the staleness contract:
 
         * ``on_stale='raise'`` (default): refuse with StaleIndexError when
-          the table advanced past the index's build commit.
+          the table advanced past the index's registered commit.
         * ``on_stale='rebuild'``: rebuild + re-register at the current
           commit, then search (correct, pays the build).
-        * ``on_stale='patch'``: repair incrementally from the commit log
-          (``read_incremental`` since the index's pinned commit feeds
-          ``ivf_patch``) — work ∝ changed data; centroids keep their
+        * ``on_stale='patch'``: answer by merge-on-read — the probe
+          merges the table's changes since the index commit
+          (``read_incremental`` → ``index_delta`` → ``ivf_search(
+          changes=...)``), so the top-k equals patch-then-probe and the
+          read writes nothing. The registration stays at its commit, so
+          the index stays stale: a later ``on_stale='raise'`` read still
+          refuses. Once the table is ``ann.COMPACT_COMMITS`` commits past
+          the index, or the changed keys pass half of
+          ``ann.MAX_PATCH_KEYS`` (the key guard, which raises past it),
+          the read first
+          compacts them into the index (``Catalog.compact_index``) and
+          re-registers it at the current commit. Centroids keep their
           trained positions (recall drifts only with the data
           distribution). Requires retained history back to the index
-          commit (``expire_commits`` past it forces a rebuild).
+          commit; ``expire_commits`` compacts an index it would pass.
         * ``on_stale='ignore'``: search the stale index (recall-tolerant
           readers; rows upserted since build are invisible/outdated)."""
-        from pydata_vector_search_spark.operators.ann import (IVFIndex,
-                                                              StaleIndexError,
-                                                              ivf_patch,
-                                                              ivf_search)
+        from pydata_vector_search_spark.operators import ann
+        changes = None
         if isinstance(index, str) and index in self.catalog:
             table = index
             entry = self.catalog.index_info(table, vector_col)
@@ -202,7 +209,7 @@ class Engine:
                     + "; build one with ann_index_create")
             if entry["stale"]:
                 if on_stale == "raise":
-                    raise StaleIndexError(
+                    raise ann.StaleIndexError(
                         f"index on {table}.{entry['vector_col']} was built "
                         f"at commit {entry['commit']} but the table is at "
                         f"commit {self.catalog.current_commit(table)}; "
@@ -219,21 +226,26 @@ class Engine:
                         inc = self.catalog.read_incremental(
                             table, since_commit=entry["commit"])
                     except ValueError as e:
-                        raise StaleIndexError(
+                        raise ann.StaleIndexError(
                             f"cannot patch index on {table!r}: {e}; "
                             "use on_stale='rebuild'") from e
-                    idx = IVFIndex.load(self.spark, entry["path"])
-                    ivf_patch(self.spark, idx, inc,
-                              id_col=self.catalog.info(table).key)
-                    self.catalog.register_index(
-                        table, entry["vector_col"], entry["path"],
-                        params=entry.get("params", {}))
+                    changes = ann.index_delta(
+                        self.spark, inc, id_col=self.catalog.info(table).key,
+                        max_patch_keys=ann.MAX_PATCH_KEYS)
+                    behind = (self.catalog.current_commit(table)
+                              - entry["commit"])
+                    if (behind >= ann.COMPACT_COMMITS
+                            or changes.num_keys > ann.MAX_PATCH_KEYS // 2):
+                        self.catalog.compact_index(table,
+                                                   entry["vector_col"])
+                        changes = None
                 elif on_stale != "ignore":
                     raise ValueError(f"unknown on_stale={on_stale!r}")
-            index = IVFIndex.load(self.spark, entry["path"])
+            index = ann.IVFIndex.load(self.spark, entry["path"])
         elif isinstance(index, str):
-            index = IVFIndex.load(self.spark, index)
-        return ivf_search(self.spark, index, query_vec, k=k, **kw)
+            index = ann.IVFIndex.load(self.spark, index)
+        return ann.ivf_search(self.spark, index, query_vec, k=k,
+                              changes=changes, **kw)
 
     # -- LLM-pipeline ops (driver mandate) --------------------------------
     def dedup_exact(self, table: str | DataFrame, text_col: str,

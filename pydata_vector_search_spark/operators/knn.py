@@ -103,7 +103,6 @@ def knn_join(left: DataFrame, right: DataFrame, vector_col: str,
              left_id: str = "left_id", right_id: str = "right_id",
              distance_col: str = "_distance",
              round_to: int | None = None,
-             dim: int | None = None,
              max_pairs: int | None = 100_000_000) -> DataFrame:
     """For every left row, its k nearest right rows (brute-force block
     nested-loop + per-left-key top-k via window).
@@ -112,8 +111,7 @@ def knn_join(left: DataFrame, right: DataFrame, vector_col: str,
     partitioned — Spark plans BroadcastNestedLoopJoin; each executor scores
     its corpus slice against the in-memory query block, and the window
     row_number ≤ k is a partial top-k per query. Pair scoring is the
-    Arrow-batched numpy distance (functions/vector.distance_arrow). ``dim``
-    is unused and kept for signature compatibility.
+    Arrow-batched numpy distance (functions/vector.distance_arrow).
 
     This is the EXACT/oracle form: cost is O(|left|·|right|) pairs. The
     ``max_pairs`` safety valve refuses plans above the cap and points at

@@ -98,7 +98,7 @@ def test_ivf_knn_join_full_probe_equals_brute_force(spark, sf_dir, index):
                  .select(F.col("vec_id").alias("left_id"), "embedding")
     corpus = emb.select(F.col("vec_id").alias("right_id"), "embedding")
     brute = {(r.left_id, r.right_id): r._distance for r in knn.knn_join(
-        queries, corpus, "embedding", k=4, round_to=6, dim=64).collect()}
+        queries, corpus, "embedding", k=4, round_to=6).collect()}
     ivf = {(r.left_id, r.vec_id): r._distance for r in ann.ivf_knn_join(
         spark, index, queries, k=4, nprobe=8, right_id="vec_id",
         query_vector_col="embedding", round_to=6).collect()}
@@ -111,7 +111,7 @@ def test_ivf_knn_join_recall_small_nprobe(spark, sf_dir, index):
                  .select(F.col("vec_id").alias("left_id"), "embedding")
     corpus = emb.select(F.col("vec_id").alias("right_id"), "embedding")
     exact = {(r.left_id, r.right_id) for r in knn.knn_join(
-        queries, corpus, "embedding", k=5, round_to=6, dim=64).collect()}
+        queries, corpus, "embedding", k=5, round_to=6).collect()}
     got = {(r.left_id, r.vec_id) for r in ann.ivf_knn_join(
         spark, index, queries, k=5, nprobe=3, right_id="vec_id",
         query_vector_col="embedding", round_to=6).collect()}
@@ -265,12 +265,11 @@ def test_ann_search_requires_registered_index(spark, tmp_path, sf_dir):
 
 def test_ivf_patch_repairs_index_incrementally(spark, sf_dir, tmp_path):
     """on_stale='patch': upserts + deletes since the index commit are
-    applied to the index from the CDC feed — post-patch search equals
-    exact KNN over the mutated table, untouched centroid partitions keep
-    their files, and the registration advances to the current commit."""
-    import glob
-    import os
-
+    merged into the read from the CDC feed — the result equals exact KNN
+    over the mutated table. Five changed keys stay below the compaction
+    threshold, so the index stays pinned at its commit;
+    test_stale_read_compacts_past_threshold covers the index state after
+    a compaction."""
     from pydata_vector_search_spark.engine import Engine
     from pydata_vector_search_spark.operators import knn
 
@@ -278,9 +277,6 @@ def test_ivf_patch_repairs_index_incrementally(spark, sf_dir, tmp_path):
     emb = read_table(spark, sf_dir, "embeddings")
     eng.ingest(emb, "emb", key="vec_id")
     eng.ann_index_create("emb", "embedding", num_centroids=8, seed=42)
-    idx_path = eng.catalog.index_info("emb", "embedding")["path"]
-    mtimes_before = {f: os.path.getmtime(f) for f in glob.glob(
-        idx_path + "/data/**/*.parquet", recursive=True)}
 
     # mutate: relabel a few rows, delete a few others
     eng.upsert("emb", emb.filter(F.col("vec_id") < 3)
@@ -296,19 +292,156 @@ def test_ivf_patch_repairs_index_incrementally(spark, sf_dir, tmp_path):
     want = [(r.vec_id, r.label) for r in knn.vector_search(
         exact_src, "embedding", qv, k=8, tiebreaker="vec_id").collect()]
     assert got == want
+    assert eng.catalog.index_info("emb", "embedding")["stale"] is True
+    # the registration did not move, so the default read still refuses
+    with pytest.raises(ann.StaleIndexError):
+        eng.ann_search("emb", qv, k=8)
+
+
+def test_stale_read_compacts_past_key_threshold(spark, sf_dir, tmp_path,
+                                                monkeypatch):
+    """Once the changed keys pass half of MAX_PATCH_KEYS, a stale read
+    compacts them into the index (ivf_patch) and re-registers it:
+    deleted keys are gone from the index, updated keys carry their new
+    labels, no key is duplicated, and partitions that hold no changed
+    key keep their files."""
+    import glob
+    import os
+
+    from pydata_vector_search_spark.engine import Engine
+
+    eng = Engine(spark, str(tmp_path / "compact"))
+    emb = read_table(spark, sf_dir, "embeddings")
+    eng.ingest(emb, "emb", key="vec_id")
+    eng.ann_index_create("emb", "embedding", num_centroids=8, seed=42)
+    idx_path = eng.catalog.index_info("emb", "embedding")["path"]
+    by_cid = {}
+    for r in spark.read.parquet(idx_path + "/data") \
+                  .select("vec_id", "__cid").collect():
+        by_cid.setdefault(r["__cid"], []).append(r.vec_id)
+    big = max(by_cid, key=lambda c: len(by_cid[c]))
+    keys = sorted(by_cid[big])      # more keys than the mean partition
+    assert len(keys) > 500 / 8
+    mtimes_before = {f: os.path.getmtime(f) for f in glob.glob(
+        idx_path + "/data/**/*.parquet", recursive=True)}
+
+    # relabel every row of the largest partition (vectors unchanged, so
+    # they stay in it), then delete two of them
+    eng.upsert("emb", emb.filter(F.col("vec_id").isin(keys))
+               .withColumn("label", F.lit(77)))
+    doomed = keys[:2]
+    eng.delete_where("emb", f"vec_id IN ({doomed[0]}, {doomed[1]})")
+
+    qv = _query(spark, sf_dir)
+    monkeypatch.setattr(ann, "MAX_PATCH_KEYS", 2 * len(keys) - 1)
+    hits = eng.ann_search("emb", qv, k=8, nprobe=8, on_stale="patch",
+                          tiebreaker="vec_id")
+    got = [(r.vec_id, r.label) for r in hits.collect()]
+    exact_src = eng.table("emb")
+    want = [(r.vec_id, r.label) for r in knn.vector_search(
+        exact_src, "embedding", qv, k=8, tiebreaker="vec_id").collect()]
+    assert got == want
     assert eng.catalog.index_info("emb", "embedding")["stale"] is False
 
-    # deleted keys are gone from the index, updated keys carry new labels
     data = spark.read.parquet(idx_path + "/data")
-    assert data.filter("vec_id = 498 OR vec_id = 499").count() == 0
-    assert data.filter("vec_id < 3").count() == 3
-    assert {r.label for r in data.filter("vec_id < 3").collect()} == {77}
-    # no duplicate rows for patched keys
+    assert data.filter(F.col("vec_id").isin(doomed)).count() == 0
+    assert {r.label for r in data.filter(F.col("vec_id").isin(keys))
+                                 .collect()} == {77}
     assert data.count() == exact_src.count()
-    # centroid partitions untouched by the changed keys keep their files
-    same = [f for f, t in mtimes_before.items()
-            if os.path.exists(f) and os.path.getmtime(f) == t]
-    assert same, "patch rewrote every partition — not incremental"
+    assert data.select("vec_id").distinct().count() == data.count()
+    # only the changed partition was rewritten
+    same = {f for f, t in mtimes_before.items()
+            if os.path.exists(f) and os.path.getmtime(f) == t}
+    assert same == {f for f in mtimes_before
+                    if f"/__cid={big}/" not in f}
+
+
+def _exact_top(eng, qv, k=8):
+    return [(r.vec_id, r.label) for r in knn.vector_search(
+        eng.table("emb"), "embedding", qv, k=k, tiebreaker="vec_id")
+        .collect()]
+
+
+def test_stale_read_compacts_after_commit_bound(spark, sf_dir, tmp_path,
+                                                monkeypatch):
+    """A stale read compacts once the table is COMPACT_COMMITS commits
+    past the index, however few keys changed: the same two keys
+    rewritten again and again still add a commit each to every merge."""
+    from pydata_vector_search_spark.engine import Engine
+
+    monkeypatch.setattr(ann, "COMPACT_COMMITS", 3)
+    eng = Engine(spark, str(tmp_path / "bound"))
+    emb = read_table(spark, sf_dir, "embeddings")
+    eng.ingest(emb, "emb", key="vec_id")
+    eng.ann_index_create("emb", "embedding", num_centroids=8, seed=42)
+    built = eng.catalog.index_info("emb", "embedding")["commit"]
+    qv = _query(spark, sf_dir)
+    for label in (71, 72, 73):
+        eng.upsert("emb", emb.filter(F.col("vec_id") < 2)
+                   .withColumn("label", F.lit(label)))
+        got = [(r.vec_id, r.label) for r in eng.ann_search(
+            "emb", qv, k=8, nprobe=8, on_stale="patch",
+            tiebreaker="vec_id").collect()]
+        assert got == _exact_top(eng, qv)
+        entry = eng.catalog.index_info("emb", "embedding")
+        assert entry["stale"] is (label < 73)
+    assert entry["commit"] == built + 3
+
+
+def test_stale_reads_keep_working_past_max_patch_keys(spark, sf_dir,
+                                                      tmp_path, monkeypatch):
+    """Changes piling up across reads never reach the key guard: with
+    MAX_PATCH_KEYS far below the rows of an index partition, a read
+    compacts once the changed keys pass half of it, so more distinct keys
+    than MAX_PATCH_KEYS change over the reads and every read still
+    answers."""
+    from pydata_vector_search_spark.engine import Engine
+
+    monkeypatch.setattr(ann, "MAX_PATCH_KEYS", 8)
+    eng = Engine(spark, str(tmp_path / "guard"))
+    emb = read_table(spark, sf_dir, "embeddings")
+    eng.ingest(emb, "emb", key="vec_id")
+    eng.ann_index_create("emb", "embedding", num_centroids=2, seed=42)
+    qv = _query(spark, sf_dir)
+    compacted = 0
+    for step in range(5):
+        keys = [10 + 3 * step + i for i in range(3)]
+        eng.upsert("emb", emb.filter(F.col("vec_id").isin(keys))
+                   .withColumn("label", F.lit(50 + step)))
+        got = [(r.vec_id, r.label) for r in eng.ann_search(
+            "emb", qv, k=8, nprobe=2, on_stale="patch",
+            tiebreaker="vec_id").collect()]
+        assert got == _exact_top(eng, qv)
+        compacted += not eng.catalog.index_info("emb", "embedding")["stale"]
+    assert compacted == 2          # at 6 changed keys, twice
+
+
+def test_stale_read_after_expire_commits(spark, sf_dir, tmp_path):
+    """expire_commits past a stale index's commit compacts the index
+    first, so a later merge-on-read still has the history it needs."""
+    from pydata_vector_search_spark.engine import Engine
+
+    eng = Engine(spark, str(tmp_path / "expire"))
+    emb = read_table(spark, sf_dir, "embeddings")
+    eng.ingest(emb, "emb", key="vec_id")
+    eng.ann_index_create("emb", "embedding", num_centroids=8, seed=42)
+    qv = _query(spark, sf_dir)
+    eng.upsert("emb", emb.filter(F.col("vec_id") < 3)
+               .withColumn("label", F.lit(77)))
+    eng.ann_search("emb", qv, k=8, on_stale="patch").collect()
+    assert eng.catalog.index_info("emb", "embedding")["stale"] is True
+
+    eng.delete_where("emb", "vec_id = 498")
+    eng.expire_commits("emb", eng.catalog.current_commit("emb"))
+    entry = eng.catalog.index_info("emb", "embedding")
+    assert entry["commit"] == eng.catalog.current_commit("emb")
+
+    eng.upsert("emb", emb.filter(F.col("vec_id").isin(3, 4))
+               .withColumn("label", F.lit(78)))
+    got = [(r.vec_id, r.label) for r in eng.ann_search(
+        "emb", qv, k=8, nprobe=8, on_stale="patch",
+        tiebreaker="vec_id").collect()]
+    assert got == _exact_top(eng, qv)
 
 
 def test_ivf_patch_refuses_oversized_batch(spark, sf_dir, tmp_path):
@@ -590,3 +723,82 @@ def test_ivf_index_rooted_at_file_uri(spark, sf_dir, tmp_path):
     assert [r.vec_id for r in ann.ivf_search_int8(
         spark, idx, qv, "vec_id", k=10, nprobe=4, refine=8,
         tiebreaker="vec_id").collect()] == exact(survivors)
+
+
+def test_merge_on_read_equals_compaction_then_probe(spark, tmp_path,
+                                                     monkeypatch):
+    """Seeded interleaving of upsert, delete_where, merge and purge_keys
+    with stale reads. At every step the merge-on-read top-k (ids and
+    distances) equals the top-k of a copy of the index compacted with
+    the same changes (ivf_patch) and probed alike, and at nprobe =
+    num_centroids it equals exact KNN over the table. The changes pile
+    up until a read crosses the compaction threshold (lowered to three
+    commits), so both read paths run; expire_commits compacts a stale
+    index before it drops the history."""
+    import shutil
+
+    from pydata_vector_search_spark.engine import Engine
+
+    rng = np.random.default_rng(11)
+    n, dim, cents = 120, 8, 4
+    schema = "vec_id long, label int, embedding array<float>"
+
+    def rows(ids, label):
+        return spark.createDataFrame(
+            [(int(i), int(label), [float(x) for x in rng.standard_normal(dim)])
+             for i in ids], schema)
+
+    def top(df):
+        return [(r.vec_id, r._distance) for r in df.collect()]
+
+    def same(got, want):
+        assert [i for i, _ in got] == [i for i, _ in want]
+        assert [d for _, d in got] == pytest.approx([d for _, d in want],
+                                                    abs=1e-12)
+
+    monkeypatch.setattr(ann, "COMPACT_COMMITS", 3)
+    eng = Engine(spark, str(tmp_path / "mor"))
+    eng.ingest(rows(range(n), 0), "t", key="vec_id")
+    eng.ann_index_create("t", "embedding", num_centroids=cents, seed=5)
+    next_key, reads = n, {True: 0, False: 0}
+    for step in range(1, 11):
+        live = sorted(r.vec_id for r in eng.table("t").select("vec_id")
+                                           .collect())
+        pick = [int(x) for x in rng.choice(live, 8, replace=False)]
+        op = ("upsert", "delete", "merge", "purge", "expire")[step % 5]
+        if op == "upsert":       # moved vectors plus one new key
+            eng.upsert("t", rows(pick + [next_key], step))
+            next_key += 1
+        elif op == "delete":
+            eng.delete_where("t", f"vec_id IN ({pick[0]}, {pick[1]})")
+        elif op == "merge":      # label -1 deletes, others update/insert
+            src = rows(pick[:4] + [next_key], step).withColumn(
+                "label", F.when(F.col("vec_id") == pick[0], -1)
+                          .otherwise(F.col("label")))
+            eng.merge("t", src, matched_delete="label = -1")
+            next_key += 1
+        elif op == "purge":
+            eng.purge_keys("t", pick[:2])
+        else:                    # after an upsert, so something to expire
+            eng.upsert("t", rows(pick[:2], step))
+            eng.expire_commits("t", eng.catalog.current_commit("t") - 1)
+
+        q = [float(x) for x in rng.standard_normal(dim)]
+        entry = eng.catalog.index_info("t", "embedding")
+        probe = dict(k=5, nprobe=2, tiebreaker="vec_id")
+        copy = ann.IVFIndex.load(spark, entry["path"])
+        if entry["stale"]:
+            shutil.copytree(entry["path"], tmp_path / f"c{step}")
+            copy = ann.IVFIndex.load(spark, str(tmp_path / f"c{step}"))
+            ann.ivf_patch(spark, copy, eng.catalog.read_incremental(
+                "t", entry["commit"]), "vec_id")
+        want = top(ann.ivf_search(spark, copy, q, **probe))
+        exact = top(knn.vector_search(eng.table("t"), "embedding", q, k=5,
+                                      tiebreaker="vec_id"))
+        same(top(eng.ann_search("t", q, k=5, nprobe=cents,
+                                on_stale="patch", tiebreaker="vec_id")),
+             exact)
+        same(top(eng.ann_search("t", q, on_stale="patch", **probe)), want)
+        if entry["stale"]:      # merged (still stale) or compacted
+            reads[eng.catalog.index_info("t", "embedding")["stale"]] += 1
+    assert reads[True] and reads[False], reads

@@ -276,8 +276,9 @@ def test_stream_changes_carries_tombstones(spark, cat, tmp_path):
 
 def test_incremental_merges_legacy_commits_without_deleted(spark, cat):
     """Change logs written before the _deleted column existed must still
-    read: mergeSchema unions footers and the missing flag coalesces to
-    false (those commits were all upserts)."""
+    read: the log's read schema (recorded as commits are logged) gives
+    them a NULL flag, which coalesces to false (those commits were all
+    upserts)."""
     import os
     cat.write("lg", _df(spark, [(1, "a")]), key="k")
     croot = cat._changes_root("lg")

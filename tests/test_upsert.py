@@ -262,7 +262,7 @@ def test_upsert_schema_evolution_adds_column(spark, tmp_path):
     """Schema evolution on upsert (the lakehouse mergeSchema contract):
     a batch carrying a NEW column widens the snapshot (old rows NULL),
     and incremental readers see the widened schema too (the change log
-    is read with mergeSchema)."""
+    is read with the union of the logged batches' columns)."""
     from pydata_vector_search_spark.operators.upsert import upsert_table
     cat = Catalog(spark, str(tmp_path / "se"))
     cat.write("t", spark.createDataFrame([(1, "a"), (2, "b")],
@@ -278,6 +278,29 @@ def test_upsert_schema_evolution_adds_column(spark, tmp_path):
     # surfaces as NULL for the historical state — merged log schema)
     old = {r.k: (r.v, r.score) for r in cat.read_asof("t", 1).collect()}
     assert old == {1: ("a", None), 2: ("b", None)}
+
+
+def test_upsert_schema_evolution_partitioned(spark, tmp_path):
+    """The same on a partitioned table, where the upsert rewrites only the
+    partition it touches and links the others' files, so most snapshot
+    files lack the new column: incremental reads, time travel and an
+    expiry still carry it."""
+    from pydata_vector_search_spark.operators.upsert import upsert_table
+    cat = Catalog(spark, str(tmp_path / "sep"))
+    cat.write("t", spark.createDataFrame(
+        [(1, "a", "p1"), (2, "b", "p2"), (3, "c", "p3")],
+        "k int, v string, p string"), key="k", partition_by=["p"])
+    upsert_table(cat, "t", spark.createDataFrame(
+        [(3, "C", "p3", 9.5)], "k int, v string, p string, score double"))
+    upsert_table(cat, "t", spark.createDataFrame(
+        [(2, "B", "p2", 1.5)], "k int, v string, p string, score double"))
+    inc = {r.k: r.score for r in cat.read_incremental("t", 1).collect()}
+    assert inc == {2: 1.5, 3: 9.5}
+    old = {r.k: (r.v, r.score) for r in cat.read_asof("t", 2).collect()}
+    assert old == {1: ("a", None), 2: ("b", None), 3: ("C", 9.5)}
+    cat.expire_commits("t", 2)
+    old = {r.k: (r.v, r.score) for r in cat.read_asof("t", 2).collect()}
+    assert old == {1: ("a", None), 2: ("b", None), 3: ("C", 9.5)}
 
 
 def test_merge_into_rejects_dup_and_null_source_keys(spark, tmp_path):

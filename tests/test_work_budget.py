@@ -115,6 +115,46 @@ def test_ivf_patch_job_budget(spark, emb, tmp_path):
     assert n <= 9
 
 
+def test_ivf_knn_join_jobs(spark, emb, index):
+    """Three jobs: the exchanges' map stages and the collect, as AQE
+    plans them. The index is read with its footer schema; inferring the
+    schema would add a fourth job."""
+    queries = emb.filter(F.col("vec_id") < 5) \
+                 .select(F.col("vec_id").alias("left_id"), "embedding")
+    n = _jobs(spark, lambda: ann.ivf_knn_join(
+        spark, index, queries, k=3, nprobe=2, right_id="vec_id",
+        query_vector_col="embedding").collect())
+    assert n == 3
+
+
+def test_stale_read_merges_on_read(spark, emb, query, tmp_path):
+    """A stale ANN read (changes below the compaction threshold) is at
+    most 5 jobs — the change log is read with an explicit schema, the
+    changed keys are collected once, the probe merges them — and writes
+    nothing: every index file keeps its inode and mtime."""
+    import glob
+    import os
+
+    from pydata_vector_search_spark.engine import Engine
+
+    eng = Engine(spark, str(tmp_path / "eng"))
+    eng.ingest(emb, "emb", key="vec_id")
+    eng.ann_index_create("emb", "embedding", num_centroids=8, seed=42)
+    files = glob.glob(eng.catalog.index_info("emb")["path"]
+                      + "/data/**/*.parquet", recursive=True)
+    before = {f: (os.stat(f).st_ino, os.stat(f).st_mtime_ns) for f in files}
+    eng.upsert("emb", emb.filter(F.col("vec_id") < 20)
+                         .withColumn("label", F.lit(9)))
+    n = _jobs(spark, lambda: eng.ann_search(
+        "emb", query, k=10, nprobe=3, on_stale="patch").collect())
+    assert n <= 5
+    after = glob.glob(eng.catalog.index_info("emb")["path"]
+                      + "/data/**/*.parquet", recursive=True)
+    assert sorted(after) == sorted(files)
+    assert {f: (os.stat(f).st_ino, os.stat(f).st_mtime_ns)
+            for f in after} == before
+
+
 @pytest.fixture
 def part_table(spark, tmp_path):
     """A keyed table partitioned three ways, one file per partition."""
